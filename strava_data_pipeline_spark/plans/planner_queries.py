@@ -516,29 +516,19 @@ def quarantine_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     way; this audit adds one scan of each committed side. The
     batch->batch_key association never trusts engine batch numbering:
     it is derived from the DATA inside each committed batch dir, so
-    the result is stable under any file-listing order. Store root is
-    deterministic per sf_dir and rebuilt per call (idempotent
-    re-runs), exactly like snapshot_diff."""
-    import hashlib
-    import os
-    import shutil
-
+    the result is stable under any file-listing order. Root, landing
+    and wait: streaming_faces.run_stream_face."""
+    from strava_data_pipeline_spark.plans.streaming_faces import (
+        _event_cols,
+        _id_slices,
+        run_stream_face,
+    )
     from strava_data_pipeline_spark.streaming.quality_gate import (
         _checks,
         start_quality_gated_sink,
     )
-    from strava_data_pipeline_spark.streaming.sync import EVENT_SCHEMA
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:6]
-    root = f"spark-warehouse/_qaudit_{tag}"
-    shutil.rmtree(root, ignore_errors=True)
-    landing = os.path.join(root, "landing")
-    target = os.path.join(root, "target")
-    quarantine = os.path.join(root, "quarantine")
-    ckpt = os.path.join(root, "ckpt")
-    os.makedirs(landing)
-
-    ev = load_table(spark, sf_dir, "events")
+    ev = _event_cols(load_table(spark, sf_dir, "events"))
     bk = F.col("event_id") % 4
     feed = ev.withColumn(
         "user_id",
@@ -552,26 +542,20 @@ def quarantine_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             -(F.col("value") + F.lit(1.0)),
         ).otherwise(F.col("value")),
     )
-    cols = [f.name for f in EVENT_SCHEMA.fields]
-    from strava_data_pipeline_spark.plans.streaming_faces import _land_many
-
-    # one part-file per batch_key (maxFilesPerTrigger=1 makes each file
-    # one micro-batch); the gate's fold is order-insensitive, so the
-    # pinned mtimes only make the batch split deterministic
-    _land_many(
-        landing,
-        [
-            (feed.where(bk == k).select(*cols), 1_000_000 + k)
-            for k in range(4)
-        ],
+    # one micro-batch per batch_key; the gate's fold is
+    # order-insensitive, so the pinned mtimes only make the batch split
+    # deterministic
+    root = run_stream_face(
+        spark,
+        sf_dir,
+        "qaudit",
+        _id_slices(feed),
+        lambda stream, out, ckpt: start_quality_gated_sink(
+            stream, f"{out}/published", f"{out}/quarantine", ckpt
+        ),
     )
-
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
-    start_quality_gated_sink(stream, target, quarantine, ckpt).awaitTermination()
+    target = os.path.join(root, "target", "published")
+    quarantine = os.path.join(root, "target", "quarantine")
 
     check_names = [name for name, _ in _checks()]
 
@@ -697,51 +681,28 @@ def rollup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the maintenance itself is O(batch) per trigger plus a
     partition-pruned read of the touched days (streaming/rollup.py);
-    this audit adds one scan of the committed rollup. Store root is
-    deterministic per sf_dir, rebuilt per call — idempotent re-runs,
-    exactly like snapshot_diff/quarantine_audit. total_value is EXACT
+    this audit adds one scan of the committed rollup (root, landing
+    and wait: streaming_faces.run_stream_face). total_value is EXACT
     integer cents end to end (r8, ADVICE r7): the rollup quantizes
     per-row to BIGINT cents and folds integers, so four merges equal
     one pass bit-for-bit — the oracle divides the same integer sum by
     100.0 and both engines emit the identical double. A float fold
     would be order-dependent and could flip a half-cent boundary."""
-    import hashlib
-    import os
-    import shutil
-
+    from strava_data_pipeline_spark.plans.streaming_faces import (
+        _event_cols,
+        _id_slices,
+        run_stream_face,
+    )
     from strava_data_pipeline_spark.streaming.rollup import (
         start_rollup_maintenance,
     )
-    from strava_data_pipeline_spark.streaming.sync import EVENT_SCHEMA
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:6]
-    root = f"spark-warehouse/_rollupaudit_{tag}"
-    shutil.rmtree(root, ignore_errors=True)
-    landing = os.path.join(root, "landing")
-    rollup = os.path.join(root, "rollup")
-    ckpt = os.path.join(root, "ckpt")
-    os.makedirs(landing)
-
-    ev = load_table(spark, sf_dir, "events")
-    cols = [f.name for f in EVENT_SCHEMA.fields]
-    from strava_data_pipeline_spark.plans.streaming_faces import _land_many
-
-    _land_many(
-        landing,
-        [
-            (ev.where(F.col("event_id") % 4 == k).select(*cols), 1_000_000 + k)
-            for k in range(4)
-        ],
+    ev = _event_cols(load_table(spark, sf_dir, "events"))
+    root = run_stream_face(
+        spark, sf_dir, "rollupaudit", _id_slices(ev), start_rollup_maintenance
     )
 
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
-    start_rollup_maintenance(stream, rollup, ckpt).awaitTermination()
-
-    return spark.read.parquet(rollup).select(
+    return spark.read.parquet(os.path.join(root, "target")).select(
         "p_day",
         "event_type",
         F.col("n_events").cast("bigint").alias("n_events"),
@@ -797,23 +758,16 @@ def attribution_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     - Batch ORDER is load-bearing (unlike quarantine/rollup_audit,
       whose folds are order-insensitive): a slice processed out of
       order would put rows behind the advanced watermark and DROP
-      them. Slices are landed one file each and their mtimes set a
-      second apart (os.utime) because the file source orders pending
-      files by modification time — equal mtimes would leave the order
-      to listing luck.
+      them, so the slices land in pinned mtime order
+      (streaming_faces.run_stream_face).
     - Deferred emission needs a watermark PAST the last real follow's
-      window before unmatched rows release, and availableNow stops at
-      the last data file — a watermark advanced by the LAST batch
-      would never get a batch to run in. Two sentinel flush batches
-      (user_id -1, ts far beyond the corpus, one row per SIDE — the
-      global watermark is the min across both withWatermark nodes)
-      provide that: flush 1 advances the watermark, and flush 2's own
-      micro-batch (maxFilesPerTrigger=1 gives every file its own batch
-      boundary inside ONE availableNow run) is where every real
-      unmatched follow finalizes. Sentinels filter out of the audit
-      by id; the second flush's own rows are the only state left
-      pending, exactly as a forever-running production stream would
-      hold its tail.
+      window before unmatched rows release: the two sentinel flush
+      batches of streaming_faces._flushes provide it, with one row per
+      SIDE because the global watermark is the min across both
+      withWatermark nodes. Sentinels filter out of the audit by id;
+      the second flush's own rows are the only state left pending,
+      exactly as a forever-running production stream would hold its
+      tail.
     - No real row is ever late: slice k+1's min event time exceeds
       slice k's max, so the watermark (max - 1h) always trails the
       next batch's data — the audit proves clean-feed semantics; late
@@ -823,8 +777,7 @@ def attribution_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: state per side is bounded by watermark + delay of
     event time (the range conjunct is what lets Spark expire buffered
     rows — joins.py's contract); the audit adds one scan of the
-    committed output. Store root is deterministic per sf_dir and
-    rebuilt per call, exactly like the other two streaming faces.
+    committed output.
 
     HOT-KEY rationale (r10 skew rehearsal): on the 25%-hot-user
     mult=100 corpus this face's symmetric hash join grinds one state
@@ -843,82 +796,41 @@ def attribution_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return _attr_face_impl(
-        spark, sf_dir, attribute_with_unmatched, "_attraudit_"
-    )
+        spark, sf_dir, attribute_with_unmatched, "attraudit"
+    )[0]
 
 
 def _attr_face_impl(
-    spark: SparkSession, sf_dir: str, joiner, root_prefix: str
-) -> DataFrame:
-    """Shared choreography of the two attribution faces (time-sliced
-    mtime-staged landing, sentinel flushes, one availableNow run,
-    size-adaptive store width, committed-parquet read-back) — one
-    spelling so the audits differ ONLY in the join operator under
-    test."""
-    import hashlib
-    import os
-    import shutil
+    spark: SparkSession, sf_dir: str, joiner, name: str
+) -> tuple[DataFrame, str]:
+    """Shared choreography of the attribution faces (time-sliced
+    landing, per-side sentinel flushes, one availableNow run,
+    size-adaptive store width) — one spelling so the audits differ
+    ONLY in the join operator under test. Returns the committed rows
+    and the face's root."""
+    from strava_data_pipeline_spark.plans.streaming_faces import (
+        _event_cols,
+        _flushes,
+        _parquet_sink,
+        _staged,
+        _time_slices,
+        run_stream_face,
+    )
+    from strava_data_pipeline_spark.streaming.tuning import (
+        _ENV_KEY,
+        scoped_stream_shuffle,
+    )
 
-    from strava_data_pipeline_spark.streaming.sync import EVENT_SCHEMA
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:6]
-    root = f"spark-warehouse/{root_prefix}{tag}"
-    shutil.rmtree(root, ignore_errors=True)
-    landing = os.path.join(root, "landing")
-    target = os.path.join(root, "target")
-    ckpt = os.path.join(root, "ckpt")
-    os.makedirs(landing)
-
-    from strava_data_pipeline_spark.plans.streaming_faces import _land_many
-
-    ev = load_table(spark, sf_dir, "events")
-    cols = [f.name for f in EVENT_SCHEMA.fields]
+    ev = _event_cols(load_table(spark, sf_dir, "events"))
     # one job resolves the slice bounds AND the feed size the store-
-    # width branch needs below (was two separate scans)
-    lo, hi, n_events = ev.agg(
-        F.min(F.col("ts").cast("long")),
-        F.max(F.col("ts").cast("long")),
-        F.count(F.lit(1)),
-    ).first()
-    step = (hi - lo) // 4 + 1
+    # width branch needs below
+    preds, hi, n_events = _time_slices(ev)
 
-    def flush_batch(n: int) -> DataFrame:
-        # one row per SIDE (ids -1 -> lead branch, -3 -> follow
-        # branch) so BOTH withWatermark nodes advance — the global
-        # watermark is their min
-        from datetime import datetime, timezone
-
-        from strava_data_pipeline_spark.functions.local_frames import (
-            one_slice_frame,
-        )
-
-        t = datetime.fromtimestamp(hi + n * 864_000, tz=timezone.utc).replace(
-            tzinfo=None
-        )
-        return one_slice_frame(
-            spark,
-            [(-1, t, -1, "view", 0.0), (-3, t, -1, "purchase", 0.0)],
-            EVENT_SCHEMA,
-        )
-
-    def run_once() -> None:
-        stream = (
-            spark.readStream.schema(EVENT_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
+    def join(stream: DataFrame) -> DataFrame:
         views = stream.where(F.col("event_id") % 3 != 0)
         purchases = stream.where(F.col("event_id") % 3 == 0)
-        joined = joiner(
+        return joiner(
             views, purchases, max_delay="30 minutes", watermark="1 hour"
-        )
-        (
-            joined.writeStream.format("parquet")
-            .option("path", target)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
         )
 
     # State-store width is SIZE-ADAPTIVE (the pagerank persist-gate
@@ -930,53 +842,25 @@ def _attr_face_impl(
     # sort (the probe ran past 595s; 32-wide finished in 357s). Width
     # tracks state volume: narrow below 1M events, analytics width
     # above. Both modes hold the same oracle hash.
-    from strava_data_pipeline_spark.streaming.tuning import (
-        _ENV_KEY,
-        scoped_stream_shuffle,
-    )
-
+    #
     # None = analytics width. Mirror stream_tuned's precedence: the env
     # override ALWAYS wins (tuning.py's documented contract), so a
     # cluster-wide stream re-size reaches this face's small-feed branch
-    # too (r8 ADVICE). n_events comes from the fused bounds+count job.
+    # too. The landing writes inside the scope are coalesce(1) jobs
+    # with no shuffle, so the width reaches only the stream.
     width = (
         4
         if n_events <= 1_000_000 and _ENV_KEY not in os.environ
         else None
     )
-    # SINGLE availableNow run, both flushes mtime-staged upfront: with
-    # maxFilesPerTrigger=1 each file is its own micro-batch and the
-    # watermark advances BETWEEN batches, so flush 2's batch already
-    # runs with flush 1's advanced watermark — the restart the two-run
-    # shape paid for (checkpoint + state-store reload, the dominant
-    # cost of the mult=100 probe) bought nothing the in-run batch
-    # boundary doesn't provide. Same committed rows, same oracle hash,
-    # verified at sf0.01 and mult=100. All six slices land concurrently
-    # (_land_many — batch order is carried by the pinned mtimes alone);
-    # the landing writes are plain batch jobs, independent of the
-    # stream-scoped shuffle width.
-    _land_many(
-        landing,
-        [
-            (
-                ev.where(
-                    (F.col("ts").cast("long") >= lo + k * step)
-                    & (F.col("ts").cast("long") < lo + (k + 1) * step)
-                ).select(*cols),
-                1_000_000 + k,
-            )
-            for k in range(4)
-        ]
-        + [
-            (flush_batch(1).select(*cols), 1_000_010),
-            (flush_batch(2).select(*cols), 1_000_020),
-        ],
+    staged = _staged(ev.where(p) for p in preds) + _flushes(
+        spark, hi, ((-1, "view"), (-3, "purchase"))
     )
     with scoped_stream_shuffle(spark, width) if width else _noop_ctx():
-        run_once()
+        root = run_stream_face(spark, sf_dir, name, staged, _parquet_sink(join))
 
-    out = spark.read.parquet(target).where(F.col("follow_id") >= 0)
-    return out.select(
+    out = spark.read.parquet(os.path.join(root, "target"))
+    out = out.where(F.col("follow_id") >= 0).select(
         F.col("user_id").cast("bigint").alias("user_id"),
         F.col("follow_id").cast("bigint").alias("follow_id"),
         "follow_type",
@@ -986,6 +870,7 @@ def _attr_face_impl(
         "lead_type",
         "lead_ts",
     )
+    return out, root
 
 
 # --------------------------------------------------------------------------
@@ -1042,8 +927,8 @@ def attribution_inner_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return _attr_face_impl(
-        spark, sf_dir, attribute_to_prior_event_bucketed, "_attrinner_"
-    )
+        spark, sf_dir, attribute_to_prior_event_bucketed, "attrinner"
+    )[0]
 
 
 # --------------------------------------------------------------------------
@@ -1081,19 +966,14 @@ def attribution_unmatched_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     output-linear hot-key remedy; the anti leg shuffles only
     (follow_id) pairs on a high-cardinality key, skew-free by
     construction."""
-    import hashlib
-
     from strava_data_pipeline_spark.streaming.joins import (
         attribute_to_prior_event_bucketed,
     )
 
-    inner = _attr_face_impl(
-        spark, sf_dir, attribute_to_prior_event_bucketed, "_attrunm_"
+    inner, root = _attr_face_impl(
+        spark, sf_dir, attribute_to_prior_event_bucketed, "attrunm"
     )
-    # the landing dir _attr_face_impl used (deterministic per sf_dir)
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:6]
-    landing = f"spark-warehouse/_attrunm_{tag}/landing"
-    landed = spark.read.parquet(landing)
+    landed = spark.read.parquet(os.path.join(root, "landing"))
     follows = landed.where(
         (F.col("event_id") >= 0) & (F.col("event_id") % 3 == 0)
     ).select(

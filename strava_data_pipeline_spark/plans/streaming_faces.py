@@ -13,7 +13,7 @@ Determinism disciplines (one per face, documented per query):
 - windowed counts: time-sliced mtime-ordered batches keep the
   watermark monotonic; sentinel flush batches finalize every real
   window (aggregation state only flushes in a batch that runs AFTER
-  the watermark advanced — the attribution_audit two-run shape).
+  the watermark advanced — see _flushes).
 - stream dedup: planted re-deliveries stay within the lateness bound
   (same batch, or the next batch's within-watermark head), because a
   dup arriving past state eviction is ALLOWED to pass (the documented
@@ -38,15 +38,31 @@ from __future__ import annotations
 import hashlib
 import os
 import shutil
+from concurrent.futures import ThreadPoolExecutor
+from datetime import datetime, timezone
+from typing import Callable, Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
+from strava_data_pipeline_spark.functions.local_frames import one_slice_frame
 from strava_data_pipeline_spark.plans.registry import register
 from strava_data_pipeline_spark.sources.catalog import load_table
+from strava_data_pipeline_spark.streaming.sync import EVENT_SCHEMA
 from strava_data_pipeline_spark.streaming.tuning import stream_tuned
 
 _FLUSH_TYPE = "__flush"
+
+# Bound on one face stream's wait, well above the slowest face run on
+# record (attribution_audit, 432 s at mult=100 in
+# SCALING_M100_R8_tunedC2.json): a trigger that never finishes fails
+# the query loudly instead of hanging the run.
+_STREAM_WAIT_S = 1800
+
+
+class StreamFaceTimeout(TimeoutError):
+    """A face's stream was still running when its bounded wait ran out."""
 
 
 def _mkroot(sf_dir: str, name: str) -> str:
@@ -57,20 +73,11 @@ def _mkroot(sf_dir: str, name: str) -> str:
     return root
 
 
-def _land(landing: str, df: DataFrame, mtime: int) -> None:
-    """One parquet file per call, mtime pinned: the file source orders
-    pending files by modification time, and equal mtimes would leave
-    batch order to listing luck (load-bearing for watermarked feeds)."""
-    before = set(os.listdir(landing))
-    df.coalesce(1).write.mode("append").parquet(landing)
-    for f in set(os.listdir(landing)) - before:
-        if f.endswith(".parquet"):
-            os.utime(os.path.join(landing, f), (mtime, mtime))
-
-
 def _land_many(landing: str, staged: list[tuple[DataFrame, int]]) -> None:
-    """Land every (df, mtime) slice CONCURRENTLY — same one-file-per-
-    batch, pinned-mtime contract as :func:`_land`.
+    """Land every (df, mtime) slice as exactly one parquet file with its
+    mtime pinned: the file source orders pending files by modification
+    time, and equal mtimes would leave batch order to listing luck
+    (load-bearing for watermarked feeds).
 
     Each slice write is a single-task job (``coalesce(1)`` collapses
     the slice's scan+filter into one task), so landing k slices
@@ -81,7 +88,6 @@ def _land_many(landing: str, staged: list[tuple[DataFrame, int]]) -> None:
     MOVE into ``landing`` afterward, so the mtime pinning never races
     another writer's listdir diff. Batch ORDER is carried entirely by
     the pinned mtimes, not by write completion order."""
-    from concurrent.futures import ThreadPoolExecutor
 
     def write_one(item: tuple[int, tuple[DataFrame, int]]) -> None:
         i, (df, mtime) = item
@@ -105,9 +111,22 @@ def _land_many(landing: str, staged: list[tuple[DataFrame, int]]) -> None:
         list(pool.map(write_one, enumerate(staged)))
 
 
-def _stream(spark: SparkSession, landing: str) -> DataFrame:
-    from strava_data_pipeline_spark.streaming.sync import EVENT_SCHEMA
+def await_stream(q: StreamingQuery) -> None:
+    """Wait at most ``_STREAM_WAIT_S`` seconds for ``q`` to terminate.
+    A failed query raises its StreamingQueryException from the wait; a
+    query still running at the bound is stopped, so no active stream
+    leaks into the next query, and reported as StreamFaceTimeout."""
+    if q.awaitTermination(_STREAM_WAIT_S):
+        return
+    label, progress, error = q.name or q.id, q.lastProgress, q.exception()
+    q.stop()
+    raise StreamFaceTimeout(
+        f"stream {label} still running after {_STREAM_WAIT_S}s"
+        f" (exception: {error}); lastProgress: {progress}"
+    )
 
+
+def _stream(spark: SparkSession, landing: str) -> DataFrame:
     return (
         spark.readStream.schema(EVENT_SCHEMA)
         .option("maxFilesPerTrigger", 1)
@@ -115,39 +134,140 @@ def _stream(spark: SparkSession, landing: str) -> DataFrame:
     )
 
 
-def _event_cols(df: DataFrame) -> DataFrame:
-    from strava_data_pipeline_spark.streaming.sync import EVENT_SCHEMA
+def run_stream_face(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    staged: list[tuple[DataFrame, int]],
+    start: Callable[[DataFrame, str, str], StreamingQuery],
+    read: Callable[[SparkSession, str], DataFrame] = _stream,
+) -> str:
+    """Run one streaming face's feed through its sink; return the root.
 
-    return df.select(*[f.name for f in EVENT_SCHEMA.fields])
-
-
-def _time_slices(ev: DataFrame, k: int = 4) -> list[DataFrame]:
-    """k contiguous epoch-range slices — the order a real feed lands."""
-    lo, hi = ev.agg(
-        F.min(F.col("ts").cast("long")), F.max(F.col("ts").cast("long"))
-    ).first()
-    step = (hi - lo) // k + 1
-    return [
-        ev.where(
-            (F.col("ts").cast("long") >= lo + i * step)
-            & (F.col("ts").cast("long") < lo + (i + 1) * step)
+    The contract every face shares:
+    - root: ``spark-warehouse/_<name>_<md5(sf_dir)[:6]>``, deterministic
+      per sf_dir and rebuilt on every call, so re-runs are idempotent.
+      The face's returned DataFrame reads it lazily, after this returns.
+    - landing: ``<root>/landing`` holds one file per staged
+      ``(df, mtime)`` slice (:func:`_land_many`), so micro-batches run
+      in staged mtime order.
+    - read: ``read(spark, landing)``, by default :func:`_stream`, whose
+      ``maxFilesPerTrigger=1`` makes every slice its own micro-batch
+      inside one availableNow run.
+    - start: ``start(stream, <root>/target, <root>/ckpt)`` starts the
+      sink under test with an availableNow trigger.
+    - wait: :func:`await_stream`, bounded; the face then reads back
+      what was committed under the root."""
+    root = _mkroot(sf_dir, name)
+    landing = os.path.join(root, "landing")
+    _land_many(landing, staged)
+    await_stream(
+        start(
+            read(spark, landing),
+            os.path.join(root, "target"),
+            os.path.join(root, "ckpt"),
         )
-        for i in range(k)
-    ], hi
-
-
-def _flush_row(spark: SparkSession, epoch_s: int) -> DataFrame:
-    from datetime import datetime, timezone
-
-    from strava_data_pipeline_spark.functions.local_frames import (
-        one_slice_frame,
     )
-    from strava_data_pipeline_spark.streaming.sync import EVENT_SCHEMA
+    return root
 
-    t = datetime.fromtimestamp(epoch_s, tz=timezone.utc).replace(tzinfo=None)
-    return one_slice_frame(
-        spark, [(-1, t, -1, _FLUSH_TYPE, 0.0)], EVENT_SCHEMA
+
+def _parquet_sink(
+    transform: Callable[[DataFrame], DataFrame],
+) -> Callable[[DataFrame, str, str], StreamingQuery]:
+    """A ``start`` for components that return a streaming frame: its
+    rows append to parquet under target."""
+
+    def start(stream: DataFrame, target: str, ckpt: str) -> StreamingQuery:
+        return (
+            transform(stream)
+            .writeStream.format("parquet")
+            .option("path", target)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+
+    return start
+
+
+def _event_cols(df: DataFrame) -> DataFrame:
+    return df.select(*EVENT_SCHEMA.fieldNames())
+
+
+def _staged(frames: Iterable[DataFrame]) -> list[tuple[DataFrame, int]]:
+    """Slices with ascending pinned mtimes, landing in the given order."""
+    return [(df, 1_000_000 + k) for k, df in enumerate(frames)]
+
+
+def _id_slices(
+    df: DataFrame, key: str = "event_id"
+) -> list[tuple[DataFrame, int]]:
+    """Four slices split by ``key % 4``: every day of the feed appears
+    in every batch."""
+    return _staged(df.where(F.col(key) % 4 == k) for k in range(4))
+
+
+def _time_slices(ev: DataFrame, k: int = 4) -> tuple[list[Column], int, int]:
+    """Predicates of k contiguous epoch-range slices — the order a real
+    feed lands — plus the feed's max epoch second and row count, all
+    from one job."""
+    t = F.col("ts").cast("long")
+    lo, hi, n = ev.agg(F.min(t), F.max(t), F.count(F.lit(1))).first()
+    step = (hi - lo) // k + 1
+    preds = [
+        (t >= lo + i * step) & (t < lo + (i + 1) * step) for i in range(k)
+    ]
+    return preds, hi, n
+
+
+def _flushes(
+    spark: SparkSession,
+    hi: int,
+    sentinels: tuple[tuple[int, str], ...] = ((-1, _FLUSH_TYPE),),
+) -> list[tuple[DataFrame, int]]:
+    """Two sentinel flush slices (user_id -1, one row per
+    ``(event_id, event_type)``), ten and twenty days past the feed's
+    last event ``hi``, staged after every data slice. Watermarked state
+    only finalizes in a batch that RUNS with the advanced watermark,
+    and availableNow stops at the last file: flush 1 advances the
+    watermark, and flush 2's own micro-batch (maxFilesPerTrigger=1 gives
+    it a batch boundary inside the same run) finalizes every real
+    window, session or unmatched row. A second availableNow run would
+    add a checkpoint and state-store reload and nothing else. The
+    sentinels' own rows stay pending or the face filters them out."""
+    out = []
+    for n in (1, 2):
+        t = datetime.fromtimestamp(hi + n * 864_000, tz=timezone.utc)
+        rows = [
+            (eid, t.replace(tzinfo=None), -1, etype, 0.0)
+            for eid, etype in sentinels
+        ]
+        out.append(
+            (one_slice_frame(spark, rows, EVENT_SCHEMA), 1_000_000 + 10 * n)
+        )
+    return out
+
+
+def _sync_feed(ev: DataFrame) -> list[tuple[DataFrame, int]]:
+    """Four id-split batches, then a correction batch that re-delivers
+    event_id % 13 == 0 rows with value + 1000 at 23:59:59 of the SAME
+    calendar day — a strictly later timestamp (rows already at/after
+    that instant are excluded), so the latest-wins winner is batch-ORDER
+    independent and the correction stays in its original day partition
+    (the documented sync contract: a correction record keeps its
+    event's calendar day)."""
+    day_end = F.to_timestamp(F.to_date("ts")) + F.expr(
+        "INTERVAL 86399 SECONDS"
     )
+    corrections = (
+        ev.where(
+            (F.col("event_id") % 13 == 0)
+            & (F.unix_micros("ts") < F.unix_micros(day_end))
+        )
+        .withColumn("ts", day_end)
+        .withColumn("value", F.col("value") + F.lit(1000.0))
+    )
+    return _id_slices(ev) + [(corrections, 1_000_004)]
 
 
 # --------------------------------------------------------------------------
@@ -156,13 +276,8 @@ def _flush_row(spark: SparkSession, epoch_s: int) -> DataFrame:
 # Latest-wins incremental upsert into a day-partitioned target
 # (streaming/sync.py = the Spark-native ON CONFLICT (id) DO UPDATE of
 # /root/reference/internal/db/activities.go:99 + the 24h-lookback sync
-# ticker of strava.go:261). Corrections re-deliver event_id % 13 == 0
-# rows with value + 1000 at 23:59:59 of the SAME calendar day — a
-# strictly later timestamp (rows already at/after that instant are
-# excluded from the correction set), so the merge winner is
-# batch-ORDER independent and the correction stays in its original day
-# partition (the documented sync contract: a correction record keeps
-# its event's calendar day).
+# ticker of strava.go:261), fed by _sync_feed's strictly-later
+# same-day corrections.
 _SYNC_AUDIT_ORACLE = """
 WITH marked AS (
     SELECT *,
@@ -202,37 +317,12 @@ def sync_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         start_incremental_sync,
     )
 
-    root = _mkroot(sf_dir, "syncaudit")
-    landing = os.path.join(root, "landing")
-    target = os.path.join(root, "target")
-    ckpt = os.path.join(root, "ckpt")
-
-    ev = load_table(spark, sf_dir, "events")
-    day_end = F.to_timestamp(F.to_date("ts")) + F.expr(
-        "INTERVAL 86399 SECONDS"
-    )
-    corrections = (
-        ev.where(
-            (F.col("event_id") % 13 == 0)
-            & (F.unix_micros("ts") < F.unix_micros(day_end))
-        )
-        .withColumn("ts", day_end)
-        .withColumn("value", F.col("value") + F.lit(1000.0))
-    )
-    _land_many(
-        landing,
-        [
-            (_event_cols(ev.where(F.col("event_id") % 4 == k)), 1_000_000 + k)
-            for k in range(4)
-        ]
-        + [(_event_cols(corrections), 1_000_004)],
+    ev = _event_cols(load_table(spark, sf_dir, "events"))
+    root = run_stream_face(
+        spark, sf_dir, "syncaudit", _sync_feed(ev), start_incremental_sync
     )
 
-    start_incremental_sync(
-        _stream(spark, landing), target, ckpt
-    ).awaitTermination()
-
-    t = spark.read.parquet(target)
+    t = spark.read.parquet(os.path.join(root, "target"))
     return t.select(
         F.col("event_id").cast("bigint").alias("event_id"),
         "ts",
@@ -266,62 +356,32 @@ def windowed_counts_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/windowed.py::windowed_type_counts, 10-min windows,
     60-min lateness, append mode): land four TIME-SLICED micro-batches
     (epoch-aligned slices, mtimes ordered — a window's rows never
-    arrive behind the watermark), finalize every real window with two
-    sentinel flush batches (append-mode aggregation state flushes only
-    in a batch that RUNS with the advanced watermark — flush 2's
-    micro-batch, inside the same availableNow run since
-    maxFilesPerTrigger=1 gives every file its own batch boundary), and
-    hash the committed windows
-    against the batch GROUP BY over the same 10-minute epoch buckets.
-    A window emitted early (non-final counts), twice, or never is a
-    hash mismatch. The sentinel's own (unfinalized) window filters out
-    by its event_type."""
+    arrive behind the watermark), finalize every real window with the
+    two sentinel flush batches (:func:`_flushes`), and hash the
+    committed windows against the batch GROUP BY over the same
+    10-minute epoch buckets. A window emitted early (non-final counts),
+    twice, or never is a hash mismatch. The sentinel's own
+    (unfinalized) window filters out by its event_type."""
     from strava_data_pipeline_spark.streaming.windowed import (
         windowed_type_counts,
     )
 
-    root = _mkroot(sf_dir, "wincount")
-    landing = os.path.join(root, "landing")
-    target = os.path.join(root, "target")
-    ckpt = os.path.join(root, "ckpt")
-
-    ev = load_table(spark, sf_dir, "events")
-    slices, hi = _time_slices(ev)
-
-    def run_once() -> None:
-        (
-            windowed_type_counts(_stream(spark, landing))
-            .writeStream.format("parquet")
-            .option("path", target)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-
-    # Both flushes mtime-staged, ONE availableNow run: with
-    # maxFilesPerTrigger=1 each file is its own micro-batch and the
-    # watermark advances between batches, so flush 2's batch already
-    # runs with flush 1's advanced watermark and finalizes every real
-    # window — the second run the old shape paid for (checkpoint +
-    # state-store reload) bought nothing the in-run batch boundary
-    # doesn't provide. Same committed rows, same oracle hash.
-    _land_many(
-        landing,
-        [(_event_cols(sl), 1_000_000 + k) for k, sl in enumerate(slices)]
-        + [
-            (_flush_row(spark, hi + 864_000), 1_000_010),
-            (_flush_row(spark, hi + 1_728_000), 1_000_020),
-        ],
+    ev = _event_cols(load_table(spark, sf_dir, "events"))
+    preds, hi, _n = _time_slices(ev)
+    root = run_stream_face(
+        spark,
+        sf_dir,
+        "wincount",
+        _staged(ev.where(p) for p in preds) + _flushes(spark, hi),
+        _parquet_sink(windowed_type_counts),
     )
-    run_once()
 
     # Window bounds go out as epoch-second BIGINTs on BOTH sides: DuckDB's
     # to_timestamp() yields TIMESTAMP WITH TIME ZONE, which the driver's
     # schema comparator (correctly) refuses to equate with Spark's naive
     # TIMESTAMP — the r8 red for this face. Integers have no tz to disagree
     # about.
-    return spark.read.parquet(target).where(
+    return spark.read.parquet(os.path.join(root, "target")).where(
         F.col("event_type") != _FLUSH_TYPE
     ).select(
         F.unix_seconds("window_start").alias("window_start"),
@@ -362,62 +422,25 @@ def dedup_stream_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     its own batch."""
     from strava_data_pipeline_spark.streaming.dedup import dedup_stream
 
-    root = _mkroot(sf_dir, "sdedup")
-    landing = os.path.join(root, "landing")
-    target = os.path.join(root, "target")
-    ckpt = os.path.join(root, "ckpt")
-
-    ev = load_table(spark, sf_dir, "events")
-    lo, _hi = ev.agg(
-        F.min(F.col("ts").cast("long")), F.max(F.col("ts").cast("long"))
-    ).first()
-    step = (_hi - lo) // 4 + 1
-    slices = [
-        ev.where(
-            (F.col("ts").cast("long") >= lo + i * step)
-            & (F.col("ts").cast("long") < lo + (i + 1) * step)
-        )
-        for i in range(4)
-    ]
+    ev = _event_cols(load_table(spark, sf_dir, "events"))
+    preds, _hi, _n = _time_slices(ev)
+    t = F.col("ts").cast("long")
     # all four per-slice maxima in ONE aggregation job (conditional
     # maxes over the shared scan) instead of one .first() job per slice
-    bounds = list(
-        ev.agg(
-            *[
-                F.max(
-                    F.when(
-                        (F.col("ts").cast("long") >= lo + i * step)
-                        & (F.col("ts").cast("long") < lo + (i + 1) * step),
-                        F.col("ts").cast("long"),
-                    )
-                )
-                for i in range(4)
-            ]
-        ).first()
-    )
-    staged = []
-    for k, sl in enumerate(slices):
-        batch = _event_cols(sl)
-        dups = _event_cols(sl.where(F.col("event_id") % 7 == 0))
+    bounds = list(ev.agg(*[F.max(F.when(p, t)) for p in preds]).first())
+    batches = []
+    for k, p in enumerate(preds):
+        sl = ev.where(p)
+        dups = sl.where(F.col("event_id") % 7 == 0)
         if k > 0 and bounds[k - 1] is not None:
-            tail = slices[k - 1].where(
-                F.col("ts").cast("long") > bounds[k - 1] - 1800
-            )
-            dups = dups.unionByName(_event_cols(tail))
-        staged.append((batch.unionByName(dups), 1_000_000 + k))
-    _land_many(landing, staged)
-
-    (
-        dedup_stream(_stream(spark, landing))
-        .writeStream.format("parquet")
-        .option("path", target)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+            tail = ev.where(preds[k - 1] & (t > bounds[k - 1] - 1800))
+            dups = dups.unionByName(tail)
+        batches.append(sl.unionByName(dups))
+    root = run_stream_face(
+        spark, sf_dir, "sdedup", _staged(batches), _parquet_sink(dedup_stream)
     )
 
-    return spark.read.parquet(target).select(
+    return spark.read.parquet(os.path.join(root, "target")).select(
         F.col("event_id").cast("bigint").alias("event_id"),
         "ts",
         F.col("user_id").cast("bigint").alias("user_id"),
@@ -488,38 +511,17 @@ def session_window_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         session_window_stats,
     )
 
-    root = _mkroot(sf_dir, "sesswin")
-    landing = os.path.join(root, "landing")
-    target = os.path.join(root, "target")
-    ckpt = os.path.join(root, "ckpt")
-
-    ev = load_table(spark, sf_dir, "events")
-    slices, hi = _time_slices(ev)
-
-    def run_once() -> None:
-        (
-            session_window_stats(_stream(spark, landing))
-            .writeStream.format("parquet")
-            .option("path", target)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-
-    # single availableNow run, both flushes mtime-staged — see
-    # windowed_counts_audit's note (maxFilesPerTrigger=1 gives flush 2
-    # a batch with flush 1's advanced watermark in-run)
-    _land_many(
-        landing,
-        [(_event_cols(sl), 1_000_000 + k) for k, sl in enumerate(slices)]
-        + [
-            (_flush_row(spark, hi + 864_000), 1_000_010),
-            (_flush_row(spark, hi + 1_728_000), 1_000_020),
-        ],
+    ev = _event_cols(load_table(spark, sf_dir, "events"))
+    preds, hi, _n = _time_slices(ev)
+    root = run_stream_face(
+        spark,
+        sf_dir,
+        "sesswin",
+        _staged(ev.where(p) for p in preds) + _flushes(spark, hi),
+        _parquet_sink(session_window_stats),
     )
-    run_once()
 
+    target = os.path.join(root, "target")
     return spark.read.parquet(target).where(F.col("user_id") >= 0).select(
         F.col("user_id").cast("bigint").alias("user_id"),
         "session_start",
@@ -557,32 +559,17 @@ def enrich_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         enrich_with_users,
     )
 
-    root = _mkroot(sf_dir, "enrich")
-    landing = os.path.join(root, "landing")
-    target = os.path.join(root, "target")
-    ckpt = os.path.join(root, "ckpt")
-
-    ev = load_table(spark, sf_dir, "events")
-    _land_many(
-        landing,
-        [
-            (_event_cols(ev.where(F.col("event_id") % 4 == k)), 1_000_000 + k)
-            for k in range(4)
-        ],
-    )
-
+    ev = _event_cols(load_table(spark, sf_dir, "events"))
     users = load_table(spark, sf_dir, "customer")
-    (
-        enrich_with_users(_stream(spark, landing), users)
-        .writeStream.format("parquet")
-        .option("path", target)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    root = run_stream_face(
+        spark,
+        sf_dir,
+        "enrich",
+        _id_slices(ev),
+        _parquet_sink(lambda stream: enrich_with_users(stream, users)),
     )
 
-    return spark.read.parquet(target).select(
+    return spark.read.parquet(os.path.join(root, "target")).select(
         F.col("event_id").cast("bigint").alias("event_id"),
         "ts",
         F.col("user_id").cast("bigint").alias("user_id"),
@@ -621,23 +608,17 @@ def ewma_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     same cross-engine contract the batch face already proves."""
     from strava_data_pipeline_spark.streaming.ewma import start_ewma_sink
 
-    root = _mkroot(sf_dir, "ewma")
-    landing = os.path.join(root, "landing")
-    target = os.path.join(root, "target")
-    ckpt = os.path.join(root, "ckpt")
-
-    ev = load_table(spark, sf_dir, "events")
-    slices, _hi = _time_slices(ev)
-    _land_many(
-        landing,
-        [(_event_cols(sl), 1_000_000 + k) for k, sl in enumerate(slices)],
+    ev = _event_cols(load_table(spark, sf_dir, "events"))
+    preds, _hi, _n = _time_slices(ev)
+    root = run_stream_face(
+        spark,
+        sf_dir,
+        "ewma",
+        _staged(ev.where(p) for p in preds),
+        start_ewma_sink,
     )
 
-    start_ewma_sink(
-        _stream(spark, landing), target, ckpt
-    ).awaitTermination()
-
-    return spark.read.parquet(target).select(
+    return spark.read.parquet(os.path.join(root, "target")).select(
         F.col("event_id").cast("bigint").alias("event_id"),
         F.col("user_id").cast("bigint").alias("user_id"),
         F.col("ewma_num").cast("bigint").alias("ewma_num"),
@@ -695,46 +676,24 @@ def versioned_sink_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         start_versioned_sink,
     )
 
-    root = _mkroot(sf_dir, "vsink")
-    landing = os.path.join(root, "landing")
-    store = os.path.join(root, "store")
-    ckpt = os.path.join(root, "ckpt")
-
-    ev = load_table(spark, sf_dir, "events")
-    day_end = F.to_timestamp(F.to_date("ts")) + F.expr(
-        "INTERVAL 86399 SECONDS"
-    )
-    corrections = (
-        ev.where(
-            (F.col("event_id") % 13 == 0)
-            & (F.unix_micros("ts") < F.unix_micros(day_end))
+    def start(stream: DataFrame, store: str, ckpt: str) -> StreamingQuery:
+        return start_versioned_sink(
+            stream, store, ckpt, partition_col="p_day", app_id="vsink_audit"
         )
-        .withColumn("ts", day_end)
-        .withColumn("value", F.col("value") + F.lit(1000.0))
-    )
-    _land_many(
-        landing,
-        [
-            (_event_cols(ev.where(F.col("event_id") % 4 == k)), 1_000_000 + k)
-            for k in range(4)
-        ]
-        + [(_event_cols(corrections), 1_000_004)],
-    )
 
-    def run_once(checkpoint: str) -> None:
-        start_versioned_sink(
-            _stream(spark, landing),
-            store,
-            checkpoint,
-            partition_col="p_day",
-            app_id="vsink_audit",
-        ).awaitTermination()
-
-    run_once(ckpt)
+    ev = _event_cols(load_table(spark, sf_dir, "events"))
+    root = run_stream_face(spark, sf_dir, "vsink", _sync_feed(ev), start)
+    store = os.path.join(root, "target")
     # the crash-after-commit-before-checkpoint replay, at full-stream
     # width: a rebuilt checkpoint re-fires batch ids 0..4 under the
     # same app_id — the markers must swallow every one
-    run_once(ckpt + "_replay")
+    await_stream(
+        start(
+            _stream(spark, os.path.join(root, "landing")),
+            store,
+            os.path.join(root, "ckpt_replay"),
+        )
+    )
 
     ver = V.current_version(spark, store)
     manifest = V.read_manifest(spark, store, ver)
@@ -878,26 +837,19 @@ def dedup_index_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         start_minhash_dedup_sink,
     )
 
-    root = _mkroot(sf_dir, "dedupidx")
-    landing = os.path.join(root, "landing")
-    index_root = os.path.join(root, "index")
-    kept_dir = os.path.join(root, "kept")
-    ckpt = os.path.join(root, "ckpt")
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    _land_many(
-        landing,
-        [
-            (docs.where(F.col("doc_id") % 4 == k), 1_000_000 + k)
-            for k in range(4)
-        ],
+    root = run_stream_face(
+        spark,
+        sf_dir,
+        "dedupidx",
+        _id_slices(docs, "doc_id"),
+        lambda stream, target, ckpt: start_minhash_dedup_sink(
+            stream, f"{target}/index", f"{target}/kept", ckpt
+        ),
+        read=read_doc_stream,
     )
 
-    start_minhash_dedup_sink(
-        read_doc_stream(spark, landing), index_root, kept_dir, ckpt
-    ).awaitTermination()
-
-    return read_kept_docs(spark, kept_dir).select(
+    return read_kept_docs(spark, f"{root}/target/kept").select(
         F.col("doc_id").cast("bigint").alias("doc_id")
     )
 
@@ -959,40 +911,21 @@ def stateful_session_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         track_sessions_event_time,
     )
 
-    root = _mkroot(sf_dir, "statefulsess")
-    landing = os.path.join(root, "landing")
-    target = os.path.join(root, "target")
-    ckpt = os.path.join(root, "ckpt")
-
-    ev = load_table(spark, sf_dir, "events")
-    slices, hi = _time_slices(ev)
-
-    def run_once() -> None:
-        (
-            track_sessions_event_time(
-                _stream(spark, landing), gap_minutes=30
-            )
-            .writeStream.format("parquet")
-            .option("path", target)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-
-    # single availableNow run, both flushes mtime-staged — see
-    # windowed_counts_audit's note (flush 2's batch fires the event-time
-    # timeouts under flush 1's advanced watermark in-run)
-    _land_many(
-        landing,
-        [(_event_cols(sl), 1_000_000 + k) for k, sl in enumerate(slices)]
-        + [
-            (_flush_row(spark, hi + 864_000), 1_000_010),
-            (_flush_row(spark, hi + 1_728_000), 1_000_020),
-        ],
+    ev = _event_cols(load_table(spark, sf_dir, "events"))
+    preds, hi, _n = _time_slices(ev)
+    root = run_stream_face(
+        spark,
+        sf_dir,
+        "statefulsess",
+        _staged(ev.where(p) for p in preds) + _flushes(spark, hi),
+        # flush 2's batch fires the event-time timeouts under flush 1's
+        # advanced watermark
+        _parquet_sink(
+            lambda stream: track_sessions_event_time(stream, gap_minutes=30)
+        ),
     )
-    run_once()
 
+    target = os.path.join(root, "target")
     return spark.read.parquet(target).where(F.col("user_id") >= 0).select(
         F.col("user_id").cast("bigint").alias("user_id"),
         F.col("n_events").cast("bigint").alias("n_events"),
@@ -1040,23 +973,12 @@ def cms_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from strava_data_pipeline_spark.functions.hashing import md5_u32
 
-    root = _mkroot(sf_dir, "cmsaudit")
-    landing = os.path.join(root, "landing")
-    target = os.path.join(root, "target")
-    ckpt = os.path.join(root, "ckpt")
-
-    ev = load_table(spark, sf_dir, "events")
-    _land_many(
-        landing,
-        [
-            (_event_cols(ev.where(F.col("event_id") % 4 == k)), 1_000_000 + k)
-            for k in range(4)
-        ],
+    ev = _event_cols(load_table(spark, sf_dir, "events"))
+    root = run_stream_face(
+        spark, sf_dir, "cmsaudit", _id_slices(ev), start_cms_sink
     )
 
-    start_cms_sink(_stream(spark, landing), target, ckpt).awaitTermination()
-
-    counters = read_cms_counters(spark, target)
+    counters = read_cms_counters(spark, os.path.join(root, "target"))
     c = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt")
     )

@@ -30,26 +30,21 @@ def _write_batch(spark, path, rows):
 def _drain_and_stop(q, timeout=120):
     """Run an availableNow query until its DATA is fully processed,
     then stop it. A query whose state uses ProcessingTimeTimeout never
-    self-terminates under availableNow: after the data batches it sits
-    in a 'No new data but cleaning up state' trigger waiting for
-    wall-clock timers that are minutes out — awaitTermination(120)
-    burned its full timeout (2x ~125s in this file, measured r12).
-    Draining = every input batch committed and no new data available;
-    the assertions these tests make (columns exist / no rows emitted /
+    self-terminates under availableNow: after the data batches it keeps
+    running state-cleanup triggers, waiting for wall-clock timers that
+    are minutes out — awaitTermination(120) burned its full timeout
+    (2x ~125s in this file). Drained = a batch has reported progress
+    and the status says no new data is available: the status flips to
+    no-data only in a trigger that starts after the last data batch
+    committed and reported its progress. (The file source reports no
+    latestOffset, so offsets cannot be compared.)
+    The assertions these tests make (columns exist / no rows emitted /
     state didn't crash) are about the committed data batches."""
     import time
 
     deadline = time.time() + timeout
     while time.time() < deadline and q.isActive:
-        s = q.status
-        if (
-            q.lastProgress is not None
-            and not s["isDataAvailable"]
-            and (
-                not s["isTriggerActive"]
-                or s["message"] == "No new data but cleaning up state"
-            )
-        ):
+        if q.lastProgress is not None and not q.status["isDataAvailable"]:
             break
         time.sleep(0.2)
     if q.isActive:
@@ -1260,6 +1255,46 @@ def test_scoped_stream_shuffle_restores_width(spark):
             assert spark.conf.get(key) == "3"
             raise RuntimeError("boom")
     assert spark.conf.get(key) == prior
+
+
+def test_face_wait_is_bounded(spark, monkeypatch):
+    """A face stream that never terminates must fail the face's wait
+    within the bound, with a typed error naming the stream and carrying
+    its last progress, and must leave no active query behind."""
+    import time
+
+    from strava_data_pipeline_spark.plans import streaming_faces as SF
+
+    bound = 3
+    monkeypatch.setattr(SF, "_STREAM_WAIT_S", bound)
+    q = (
+        spark.readStream.format("rate")
+        .option("rowsPerSecond", 1)
+        .load()
+        .writeStream.format("noop")
+        .queryName("never_ends")
+        .start()
+    )
+    try:
+        deadline = time.time() + 120
+        while q.lastProgress is None and time.time() < deadline:
+            time.sleep(0.2)
+        assert q.lastProgress is not None
+
+        t0 = time.time()
+        with pytest.raises(SF.StreamFaceTimeout) as err:
+            SF.await_stream(q)
+        waited = time.time() - t0
+        assert spark.streams.active == []
+    finally:
+        if q.isActive:
+            q.stop()
+
+    # the wait itself is the bound; the rest is stopping the query
+    assert bound <= waited < bound + 10
+    msg = str(err.value)
+    assert "never_ends" in msg
+    assert "lastProgress: {" in msg and '"numInputRows"' in msg
 
 
 def test_event_time_sessionizer_gap_and_timeout(spark, dirs):

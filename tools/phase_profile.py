@@ -66,7 +66,7 @@ def main() -> None:
     DI.read_snapshot = V.read_snapshot
     import strava_data_pipeline_spark.plans.streaming_faces as SF
 
-    SF._land = timed("_land", SF._land)
+    SF._land_many = timed("_land_many", SF._land_many)
     import strava_data_pipeline_spark.operators.dedup as D
 
     D.minhash_signatures = timed("minhash_signatures(lazy)", D.minhash_signatures)
