@@ -1,5 +1,5 @@
-"""Headline benchmark: runs the flagship queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) and prints ONE JSON line:
+"""Headline benchmark: runs the registry rows tagged "bench" at
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 test data) and prints ONE JSON line:
 
     {"metric": "...", "value": total_sec, "unit": "sec",
      "queries": {name: sec, ...}, "sf": ...}
@@ -15,246 +15,28 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path[:0] = [HERE, os.path.join(HERE, "tools")]
 
-BENCH_QUERIES = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier",
-    "top_customers_by_revenue",
-    "ingest_upsert",
-    "user_activity_join",
-    "athlete_weekly_summary",
-    "events_sessionize",
-    "events_asof_profile",
-    "type_streaks",
-    "dedup_minhash",
-    "dedup_ngram_jaccard",
-    "ann_topk",
-    "ann_ivf",
-    "text_quality",
-    "cdc_merge",
-    "events_in_windows",
-    "percentile_stats",
-    "corpus_split_counts",
-    # round-2 additions
-    "dedup_simhash64",
-    "dedup_embedding",
-    "ann_lsh",
-    "user_upsert",
-    "key_lifecycle",
-    "user_token_state",
-    "multimodal_features",
-    # round-2b additions
-    "q8_market_share",
-    "q13_order_distribution",
-    "q18_large_orders",
-    "dedup_clusters",
-    "decontaminate",
-    "quality_filter",
-    "tfidf_top_terms",
-    "events_funnel",
-    "retention_cohorts",
-    "events_gapfill",
-    "session_stats",
-    "events_latest_n",
-    "unigram_logprob",
-    "customer_rfm",
-    "parts_bought_together",
-    "corpus_chunk",
-    # round-2c: the TPC-H completion set
-    "q2_min_cost_supplier",
-    "q6_forecast_revenue",
-    "q9_product_profit",
-    "q11_important_parts",
-    "q12_returnflag_priority",
-    "q15_top_supplier",
-    "q16_supplier_count",
-    "q20_dominant_suppliers",
-    "q21_waiting_suppliers",
-    "boilerplate_prune",
-    "vocab_oov_rate",
-    "kmeans_lloyd",
-    "ann_filtered",
-    "events_rank_suite",
-    "events_sliding_window",
-    "inverted_index",
-    "scd2_intervals",
-    # round-2d additions
-    "repetition_metrics",
-    "heavy_hitters",
-    "heavy_hitters_sampled",
-    "sessions_overlap_windows",
-    "bucketed_join",
-    "pagerank_parts",
-    "zorder_curve",
-    "semdedup",
-    "dedup_substring",
-    "events_rolling_7d",
-    # round-3 additions
-    "token_refresh",
-    "jwt_validate",
-    "pii_redact",
-    "source_caps",
-    "perplexity_buckets",
-    "q10_returned_items",
-    "dedup_containment",
-    # round-4 additions
-    "dedup_incremental",
-    # round-5 additions (curation pack)
-    "classifier_quality_score",
-    "dsir_weights",
-    "bpe_pair_counts",
-    "decontaminate_bloom",
-    "ngram_novelty",
-    "domain_kl",
-    "copurchase_triangles",
-    "embedding_power_iteration",
-    "minhash_error_eval",
-    "snapshot_diff",
-    # round-5 additions (mining pack)
-    "skipgram_pmi",
-    "bigram_logprob",
-    "ann_pq",
-    "ivf_balance",
-    "simhash_error_eval",
-    # round-6 additions (mining pack, 2nd batch — previously registry-only)
-    "embedding_outliers",
-    "cluster_purity",
-    "ann_recall_eval",
-    # round-6: the real PPM decode path
-    "multimodal_decode",
-    # round-6 additions (rewrite pack)
-    "dedup_span_rewrite",
-    "decontaminate_span",
-    "entropy_score",
-    # round-6 additions (LM pack)
-    "bigram_kneser_ney",
-    "split_leakage",
-    "bpe_merge_rounds",
-    # round-6 additions (tokenizer pack)
-    "wordpiece_vocab",
-    "wordpiece_encode",
-    "tokenizer_fertility",
-    # round-6 additions (graph pack)
-    "kcore_peel",
-    "degree_histogram",
-    # round-6 additions (ops pack)
-    "range_partition_plan",
-    "view_delta_maintenance",
-    "fuzzy_dict_match",
-    "weighted_sample",
-    "ann_mrr_ndcg",
-    "table_stats",
-    # round-6 additions (time-series pack)
-    "events_ewma",
-    "mad_outliers",
-    "event_transitions",
-    "cusum_changepoint",
-    # round-6 additions (traversal pack)
-    "bfs_distance",
-    "join_delta_maintenance",
-    "skyline_pareto",
-    "interval_coverage",
-    # round-6 additions (stats pack)
-    "corr_matrix",
-    "trend_fit",
-    "chi2_independence",
-    # round-6 additions (product pack)
-    "attribution_last_touch",
-    "ab_test_eval",
-    "dau_mau_stickiness",
-    # round-6 additions (planner-audit pack)
-    "join_cardinality_audit",
-    "selectivity_audit",
-    "compaction_plan",
-    "data_quality_checks",
-    "groupwise_quantiles",
-    # round-7 additions (retrieval pack)
-    "bm25_topk",
-    "hybrid_rank_fusion",
-    # round-8 additions (skew twin + curation capstone + RLE8 decode;
-    # the streaming faces stay tier2-only like quarantine/rollup_audit)
-    "sessions_overlap_bucketed",
-    "curation_pipeline_e2e",
-    "multimodal_decode_bmp",
-    # round-8 continuation (LZW decode + per-source calibration + the
-    # two-phase global shard plan; stateful_session_audit stays
-    # tier2-only like the other streaming faces)
-    "multimodal_decode_gif",
-    "quality_calibration",
-    "corpus_shard_plan",
-    "cms_heavy_hitters",
-    "multimodal_resize",
-    # round-9 additions (PNG decode + the shard plan's per-bucket
-    # diagnostic; export_pipeline_e2e stays tier2-only like the other
-    # disk-choreography faces — it IS curation_pipeline_e2e plus a
-    # versioned-store publish + replay)
-    "multimodal_decode_png",
-    "corpus_shard_buckets",
-    "text_normalize",
-    "multimodal_decode_jpeg",
-    "multimodal_decode_wav",
-    "multimodal_frame_sample",
-    # round-10 additions: the new rows (deep-PNG profiles, bloom join
-    # reduction) AND — reversing the faces-stay-tier2 stance on the r9
-    # verdict's explicit ask — the four most expensive disk/streaming
-    # faces, so the sf0.1 2x gate can finally see them regress at the
-    # scale it benches (they were previously visible only to the
-    # sf0.01 tier2 floors)
-    "multimodal_decode_png_deep",
-    "bloom_semi_join",
-    "export_pipeline_e2e",
-    "attribution_audit",
-    "dedup_index_audit",
-    "versioned_sink_audit",
-    "attribution_inner_audit",
-    "multimodal_decode_wav_ima",
-    # r11: the two r10 rows that shipped without headline floors, plus
-    # the new hot-key LEFT-OUTER composition face (expensive streaming
-    # artifact — gets a floor from its landing round, closing the
-    # pattern VERDICT r10 task 2 flagged)
-    "ann_binary",
-    "attribution_unmatched_audit",
-]
+from bench_compare import BAND_MARGIN, CUTOFF, RATIO, compare  # noqa: E402
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from strava_data_pipeline_spark.plans import registry
-    from strava_data_pipeline_spark.session import get_spark
+    from strava_data_pipeline_spark.session import get_spark, warm_python_workers
 
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
     queries = registry.all_queries()
 
-    # warm the JVM + parquet footers so we measure query time, not startup
+    # warm the JVM, the parquet footers and the Python workers so we
+    # measure query time, not startup
     queries["q1_pricing_summary"](spark, sf_dir).count()
-    # warm the Python worker runtime for the same reason: the first
-    # mapInPandas/Arrow query in a JVM otherwise pays the fork of a
-    # worker per core plus a pandas+numpy import in each (~10s at 32
-    # cores, measured: multimodal_decode cold 10.97s vs 1.38s warm) —
-    # a startup cost charged to whichever query happens to cross the
-    # Python boundary first, not that query's own work. One tiny
-    # identity mapInPandas over one partition per core forks and warms
-    # them all. Measurement methodology is otherwise unchanged; the
-    # old numbers (BENCH_r10, BASELINE_BENCH floors) stay comparable
-    # because floors are fresh-JVM minimums of queries that mostly ran
-    # warm anyway.
-    def _warm(it):
-        import numpy  # noqa: F401  — the decode stages' import cost
-
-        return it
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or (
-        os.cpu_count() or 8
-    )
-    spark.range(0, cpus, 1, cpus).mapInPandas(_warm, "id long").write.format(
-        "noop"
-    ).mode("overwrite").save()
+    warm_python_workers(spark)
 
     timings: dict[str, float] = {}
-    for name in BENCH_QUERIES:
+    for name in registry.tagged("bench"):
         t0 = time.time()
         df = queries[name](spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
@@ -317,9 +99,9 @@ def _subsecond_aggregate_regressions(
     cur: dict,
     band: list | None,
     label: str,
-    ratio: float = 1.5,
-    cutoff: float = 1.0,
-    band_margin: float = 1.25,
+    ratio: float = RATIO,
+    cutoff: float = CUTOFF,
+    band_margin: float = BAND_MARGIN,
     members: list | None = None,
 ) -> set:
     """One gated quantity for the queries the per-query cutoff skips:
@@ -355,67 +137,46 @@ def _subsecond_aggregate_regressions(
 
 
 def gate(timings: dict, floor_path: str | None = None, tier2: dict | None = None) -> int:
-    sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
-    from bench_compare import compare
-
-    floor_path = floor_path or os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BASELINE_BENCH.json"
-    )
+    floor_path = floor_path or os.path.join(HERE, "BASELINE_BENCH.json")
     if not os.path.exists(floor_path):
         print(f"regression gate: no floor at {floor_path}, skipping", file=sys.stderr)
         return 0
     with open(floor_path) as f:
         floor_doc = json.load(f)
-    # 1.0s absolute cutoff: sub-second queries jitter multiplicatively
-    # (an r6 quiet-box run flagged user_activity_join at 0.741s — 3.5
-    # MILLISECONDS past its margined band on a host cycling between
-    # load 0 and 13) and their regressions are invisible in the
-    # aggregate the gate protects; the expensive plans are the ones
-    # that can go quadratic. The recorded variance bands MUST reach
-    # the compare (a query at or below its margined band high is
-    # observed machine variance, not a plan regression) — the first
-    # r6 gate run flagged decontaminate at 1.46s, inside its recorded
-    # [1.33, 1.62] band, because the bands weren't passed here.
-    regressed = set(
-        compare(
-            floor_doc["queries"],
-            timings,
-            ratio=1.5,
-            min_abs_sec=1.0,
-            bands=floor_doc.get("bands"),
-        )
-    )
-    # The 1.0s cutoff leaves ~60 sub-second queries individually
-    # unguarded; their SUM is gated as one quantity so a broad
-    # small-query regression (a session-config slip, a new per-query
-    # fixed cost) cannot hide under the cutoff. The set is defined by
-    # the FLOOR (floor < cutoff), so membership is stable across runs.
-    regressed |= _subsecond_aggregate_regressions(
-        floor_doc["queries"],
-        timings,
-        band=floor_doc.get("sub_cutoff_band"),
-        label="subsecond_sum",
-        members=floor_doc.get("sub_cutoff_members"),
-    )
+    regressed: set[str] = set()
     # tier2 (all-registry sf0.01) compares when BOTH sides carry it —
     # the non-headline queries' only perf guard
-    if tier2 and floor_doc.get("tier2_queries"):
+    for prefix, label, cur in (("", "", timings), ("tier2_", "tier2:", tier2)):
+        floor = floor_doc.get(prefix + "queries")
+        if not cur or not floor:
+            continue
+        # The CUTOFF (1.0s) absolute floor: sub-second queries jitter
+        # multiplicatively (an r6 quiet-box run flagged
+        # user_activity_join at 0.741s — 3.5 MILLISECONDS past its
+        # margined band on a host cycling between load 0 and 13) and
+        # their regressions are invisible in the aggregate the gate
+        # protects; the expensive plans are the ones that can go
+        # quadratic. The recorded variance bands MUST reach the
+        # compare (a query at or below its margined band high is
+        # observed machine variance, not a plan regression) — the
+        # first r6 gate run flagged decontaminate at 1.46s, inside its
+        # recorded [1.33, 1.62] band, because the bands weren't passed.
         regressed |= {
-            f"tier2:{n}"
+            label + n
             for n in compare(
-                floor_doc["tier2_queries"],
-                tier2,
-                ratio=1.5,
-                min_abs_sec=1.0,
-                bands=floor_doc.get("tier2_bands"),
+                floor, cur, min_abs_sec=CUTOFF, bands=floor_doc.get(prefix + "bands")
             )
         }
+        # The cutoff leaves the sub-second queries individually
+        # unguarded; their SUM is gated as one quantity so a broad
+        # small-query regression (a session-config slip, a new
+        # per-query fixed cost) cannot hide under the cutoff.
         regressed |= _subsecond_aggregate_regressions(
-            floor_doc["tier2_queries"],
-            tier2,
-            band=floor_doc.get("tier2_sub_cutoff_band"),
-            label="tier2:subsecond_sum",
-            members=floor_doc.get("tier2_sub_cutoff_members"),
+            floor,
+            cur,
+            band=floor_doc.get(prefix + "sub_cutoff_band"),
+            label=label + "subsecond_sum",
+            members=floor_doc.get(prefix + "sub_cutoff_members"),
         )
     if regressed:
         print(f"regression gate FAILED: {sorted(regressed)}", file=sys.stderr)
@@ -433,11 +194,9 @@ def emit(out: dict) -> None:
     SPARK_GRAFT_BENCH_FILE must not throw away the whole run's numbers
     after ~90s of benchmark work."""
     print(json.dumps(out))
-    local_path = os.environ.get("SPARK_GRAFT_BENCH_FILE", "BENCH_LOCAL.json")
-    if not os.path.isabs(local_path):
-        local_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), local_path
-        )
+    local_path = os.path.join(
+        HERE, os.environ.get("SPARK_GRAFT_BENCH_FILE", "BENCH_LOCAL.json")
+    )
     try:
         with open(local_path, "w") as f:
             json.dump(out, f)

@@ -4,7 +4,7 @@ and bucketed carry-forward (the lag / last-ignorenulls class).
 Why these exist: every per-key sequential window (cumsum, lag,
 last-ignorenulls) hash-partitions by the key, so ONE task sorts and
 scans a hot key's entire history — the r7/r8 Zipf rehearsals measured
-3.3-5.4x hot-user taxes on exactly these shapes (SCALING_SKEW_R7/R8),
+3.3-5.4x hot-user taxes on exactly these shapes (artifacts/SCALING_SKEW_R7/R8),
 and AQE cannot split a window partition. ``sessionize_bucketed``
 (operators/sessionize.py) proved the fix for session break counts;
 this module is the same two-phase idea factored into the two reusable

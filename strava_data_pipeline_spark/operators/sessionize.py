@@ -64,12 +64,12 @@ def sessionize_bucketed(
     no per-user window ever sees a whole user.
 
     ``sessionize`` hash-partitions by user, so ONE task sorts a hot
-    user's entire history — the r7 Zipf rehearsal (SCALING_SKEW_R7)
+    user's entire history — the r7 Zipf rehearsal (artifacts/SCALING_SKEW_R7)
     measured a 3.8x tax on sessions_overlap_windows when one user
     holds 25% of a 10M-row corpus, and AQE cannot split a window
     partition. This variant is the two-phase production shape.
 
-    Measured trade at mult=100 (SCALING_SKEW_R7.json
+    Measured trade at mult=100 (artifacts/SCALING_SKEW_R7.json
     sessionize_bucketed_probe): 1.56x faster than plain under the
     25%-hot-user skew (6.7s -> 4.3s), 2.4x SLOWER on uniform data
     (1.6s -> 3.9s — two extra exchanges + the summary join are pure

@@ -93,7 +93,7 @@ GROUP BY 1
 """
 
 
-@register("events_in_windows", oracle=_RANGE_ORACLE, tags=("temporal",))
+@register("events_in_windows", oracle=_RANGE_ORACLE, tags=("temporal", "bench"))
 def events_in_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-window event stats for 25 overlapping 36-hour windows
     (derived from nation). Dimension-sized window side → broadcast
@@ -172,7 +172,7 @@ FROM events GROUP BY 1
 """
 
 
-@register("percentile_stats", oracle=_PCTL_ORACLE, tags=("analytics",))
+@register("percentile_stats", oracle=_PCTL_ORACLE, tags=("analytics", "bench"))
 def percentile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact linear-interpolation percentiles of value per event type.
     Spark's ``percentile`` matches DuckDB's ``quantile_cont``; at
@@ -408,7 +408,7 @@ LEFT JOIN p USING (user_id)
 """
 
 
-@register("events_funnel", oracle=_FUNNEL_ORACLE, tags=("advanced",))
+@register("events_funnel", oracle=_FUNNEL_ORACLE, tags=("advanced", "bench"))
 def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Strictly-ordered view→click→purchase funnel per user in ONE scan
     and ONE user_id exchange: running-min windows carry "first view so
@@ -471,7 +471,7 @@ GROUP BY 1, 2
 """
 
 
-@register("retention_cohorts", oracle=_RETENTION_ORACLE, tags=("advanced",))
+@register("retention_cohorts", oracle=_RETENTION_ORACLE, tags=("advanced", "bench"))
 def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classic retention triangle: users cohorted by first-seen day,
     counted on each later active day offset. The cohort dim aggregates
@@ -639,7 +639,7 @@ FROM calendar c LEFT JOIN daily d USING (user_id, day)
 """
 
 
-@register("events_gapfill", oracle=_GAPFILL_ORACLE, tags=("advanced",))
+@register("events_gapfill", oracle=_GAPFILL_ORACLE, tags=("advanced", "bench"))
 def events_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-series densification (the hypertable gap-fill): each user's
     daily series is completed over their OWN [first, last] day span —
@@ -697,7 +697,7 @@ WHERE rn <= 3
 """
 
 
-@register("events_latest_n", oracle=_LATEST_N_ORACLE, tags=("advanced",))
+@register("events_latest_n", oracle=_LATEST_N_ORACLE, tags=("advanced", "bench"))
 def events_latest_n(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Latest 3 events PER USER — the per-key feed complement of the
     global recent_activities top-N. A partitioned row_number window
@@ -859,7 +859,7 @@ WINDOW w AS (PARTITION BY event_type ORDER BY n_events DESC)
 """
 
 
-@register("events_rank_suite", oracle=_RANKS_ORACLE, tags=("advanced",))
+@register("events_rank_suite", oracle=_RANKS_ORACLE, tags=("advanced", "bench"))
 def events_rank_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rank / dense_rank / percent_rank / cume_dist over each user's
     event count within their event type — the four ranking semantics
@@ -908,7 +908,7 @@ GROUP BY 1, 2
 """
 
 
-@register("events_sliding_window", oracle=_SLIDING_ORACLE, tags=("advanced",))
+@register("events_sliding_window", oracle=_SLIDING_ORACLE, tags=("advanced", "bench"))
 def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Six-hour windows sliding every hour (hopping aggregate) — the
     batch twin of the streaming windowed counts. Spark's F.window with a
@@ -964,7 +964,7 @@ FROM segs
 """
 
 
-@register("scd2_intervals", oracle=_SCD2_ORACLE, tags=("advanced",))
+@register("scd2_intervals", oracle=_SCD2_ORACLE, tags=("advanced", "bench"))
 def scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Type-2 slowly-changing dimension BUILD: collapse each user's
     event stream into [valid_from, valid_to) intervals of constant
@@ -1015,7 +1015,7 @@ def scd2_intervals_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """scd2_intervals through the two-phase primitives — SAME oracle,
     identical hash. The plain build's lag + running-segment windows
     hand ONE task the hot user's whole stream (measured 5.41x tax,
-    SCALING_SKEW_R8.json); here the change flag comes from
+    artifacts/SCALING_SKEW_R8.json); here the change flag comes from
     operators/bucketed_prefix.bucketed_carry (lag = carry of a
     never-null column) over (user, day) buckets, and the segment id
     from bucketed_cumsum of the flag on the same buckets — the
@@ -1101,7 +1101,7 @@ LIMIT 100
 """
 
 
-@register("heavy_hitters", oracle=_HEAVY_ORACLE, tags=("advanced",))
+@register("heavy_hitters", oracle=_HEAVY_ORACLE, tags=("advanced", "bench"))
 def heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact heavy hitters over (user_id, event_type): one map-side
     partial-aggregated groupBy, then the global (total, n_groups) pair
@@ -1165,7 +1165,7 @@ LIMIT 100
 """
 
 
-@register("heavy_hitters_sampled", oracle=_HEAVY_SAMPLED_ORACLE, tags=("advanced",))
+@register("heavy_hitters_sampled", oracle=_HEAVY_SAMPLED_ORACLE, tags=("advanced", "bench"))
 def heavy_hitters_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sampled heavy-hitter estimate: hash-gate the fact table to 25%
     BEFORE the shuffle (the gate is a codegen-resident predicate on the
@@ -1239,7 +1239,7 @@ GROUP BY 1
 """
 
 
-@register("sessions_overlap_windows", oracle=_OVERLAP_ORACLE, tags=("temporal",))
+@register("sessions_overlap_windows", oracle=_OVERLAP_ORACLE, tags=("temporal", "bench"))
 def sessions_overlap_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Which analysis windows does each user session overlap? Session
     intervals (30-min-gap rollup) overlap-joined to 25 overlapping
@@ -1287,7 +1287,7 @@ def sessions_overlap_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # 189. sessions_overlap_bucketed — the skew-robust twin (r8)
 # --------------------------------------------------------------------------
-@register("sessions_overlap_bucketed", oracle=_OVERLAP_ORACLE, tags=("temporal",))
+@register("sessions_overlap_bucketed", oracle=_OVERLAP_ORACLE, tags=("temporal", "bench"))
 def sessions_overlap_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """sessions_overlap_windows through the skew-robust session build —
     SAME oracle, identical hash. The plain query's scale hazard was
@@ -1296,7 +1296,7 @@ def sessions_overlap_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     window, where ONE task sorts a hot user's entire history — the r7
     Zipf rehearsal measured a 3.81x tax when one user holds 25% of a
     10M-row corpus, and AQE cannot split a window partition
-    (SCALING_SKEW_R7.json). This twin swaps in
+    (artifacts/SCALING_SKEW_R7.json). This twin swaps in
     operators/sessionize.py::sessionize_bucketed (intra-bucket window
     over (user, day) + one-row-per-bucket boundary repair — the
     sequential dependency rides the bucket summary, never the facts),
@@ -1395,7 +1395,7 @@ LIMIT 50
 _PAGERANK_PERSIST_ROWS = 4_000_000
 
 
-@register("pagerank_parts", oracle=_pagerank_oracle(), tags=("graph",))
+@register("pagerank_parts", oracle=_pagerank_oracle(), tags=("graph", "bench"))
 def pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-50 parts by PageRank over the undirected co-purchase graph
     (parts sharing an order, the parts_bought_together edge set). Three
@@ -1540,7 +1540,7 @@ def _rolling_emit(cum: DataFrame) -> DataFrame:
     )
 
 
-@register("events_rolling_7d", oracle=_ROLLING_ORACLE, tags=("advanced", "temporal"))
+@register("events_rolling_7d", oracle=_ROLLING_ORACLE, tags=("advanced", "temporal", "bench"))
 def events_rolling_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user 7-day rolling count and value sum — the time-RANGE
     moving aggregate, computed as a DELTA-STREAM PREFIX SUM instead of
@@ -1602,7 +1602,7 @@ def events_rolling_7d_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate a pure per-user prefix sum; its residual skew hazard is
     that the cumsum window still hands ONE task the hot user's whole
     delta stream (measured 4.96x tax at a 25%-hot user,
-    SCALING_SKEW_R8.json). operators/bucketed_prefix.bucketed_cumsum
+    artifacts/SCALING_SKEW_R8.json). operators/bucketed_prefix.bucketed_cumsum
     splits that into day buckets of the packed sort key: the intra
     window sorts one user-DAY of deltas, bucket totals ride a
     one-row-per-bucket per-user window, and the offset joins back on

@@ -128,7 +128,7 @@ GROUP BY 1
 """
 
 
-@register("q8_market_share", oracle=_Q8_ORACLE, tags=("analytics",))
+@register("q8_market_share", oracle=_Q8_ORACLE, tags=("analytics", "bench"))
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NATION_3's share of PROMO-part volume sold into EUROPE, per order
     year: conditional-aggregation ratio over a 7-way join. nation/region
@@ -186,7 +186,7 @@ GROUP BY 1
 """
 
 
-@register("q13_order_distribution", oracle=_Q13_ORACLE, tags=("analytics",))
+@register("q13_order_distribution", oracle=_Q13_ORACLE, tags=("analytics", "bench"))
 def q13_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution of customers by non-urgent order count, INCLUDING
     zero-order customers: left outer join (filter on the join condition,
@@ -314,7 +314,7 @@ LIMIT 100
 """
 
 
-@register("q18_large_orders", oracle=_Q18_ORACLE, tags=("analytics",))
+@register("q18_large_orders", oracle=_Q18_ORACLE, tags=("analytics", "bench"))
 def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customers with very large orders: the HAVING subquery becomes a
     groupBy + filter + left_semi join (ids only shuffle), then the
@@ -489,7 +489,7 @@ FROM base b CROSS JOIN q
 """
 
 
-@register("customer_rfm", oracle=_RFM_ORACLE, tags=("analytics",))
+@register("customer_rfm", oracle=_RFM_ORACLE, tags=("analytics", "bench"))
 def customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quintile RFM segmentation WITHOUT the classic global ntile —
     ntile(5) funnels every customer through one window partition, the
@@ -567,7 +567,7 @@ LIMIT 50
 """
 
 
-@register("parts_bought_together", oracle=_BASKET_ORACLE, tags=("analytics",))
+@register("parts_bought_together", oracle=_BASKET_ORACLE, tags=("analytics", "bench"))
 def parts_bought_together(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top co-purchased part pairs via basket arrays: ONE
     orderkey-keyed shuffle (map-side-combined collect_list) and a
@@ -622,7 +622,7 @@ LIMIT 20
 """
 
 
-@register("q10_returned_items", oracle=_Q10_ORACLE, tags=("analytics",))
+@register("q10_returned_items", oracle=_Q10_ORACLE, tags=("analytics", "bench"))
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10: customers who returned the most revenue in a quarter.
     Plan shape: the returnflag + quarter predicates prune BOTH fact

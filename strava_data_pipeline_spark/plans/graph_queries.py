@@ -10,7 +10,7 @@ measured distribution.
 Both queries build the same co-purchase edge set as
 `copurchase_triangles` (basket arrays -> in-codegen pair explode, one
 orderkey shuffle), so the 100 TB input path is already rehearsed at
-mult=100 (SCALING.json mult100_r6).
+mult=100 (artifacts/SCALING.json mult100_r6).
 
 No reference parity lines: the reference (a Go activity service) has
 no graph tier; these are beyond-reference operators the task brief
@@ -133,7 +133,7 @@ SELECT s AS partkey, peel_round, deg_at_peel FROM (
 _KCORE_PRUNE_ROWS = 4_000_000
 
 
-@register("kcore_peel", oracle=_KCORE_ORACLE, tags=("analytics", "graph"))
+@register("kcore_peel", oracle=_KCORE_ORACLE, tags=("analytics", "graph", "bench"))
 def kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-core decomposition of the co-purchase graph, four unrolled
     peel rounds at k=100 (the co-purchase graph's median degree is
@@ -148,7 +148,7 @@ def kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     SIZE-ADAPTIVE execution (r8): two measured regimes, gated on the
     parquet-stats lineitem row bound exactly like pagerank_parts'
     persist gate, each keeping the regime where it measured faster
-    (SCALING_M100_R7_kcore.json vs _R6_graph.json):
+    (artifacts/SCALING_M100_R7_kcore.json vs _R6_graph.json):
 
     - below _KCORE_PRUNE_ROWS — INCREMENTAL degree maintenance
       (_kcore_incremental, the r7 shape): at sf0.1 it HALVES the query
@@ -364,7 +364,7 @@ FROM deg GROUP BY 1
 """
 
 
-@register("degree_histogram", oracle=_DEGHIST_ORACLE, tags=("analytics", "graph"))
+@register("degree_histogram", oracle=_DEGHIST_ORACLE, tags=("analytics", "graph", "bench"))
 def degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Log2-bucketed degree distribution of the co-purchase graph —
     the skew audit that justifies (or indicts) every degree-dependent

@@ -191,7 +191,7 @@ WHERE d.doc_id % 10 = 0
 """
 
 
-@register("dedup_incremental", oracle=_incremental_oracle(), tags=("llm", "dedup"))
+@register("dedup_incremental", oracle=_incremental_oracle(), tags=("llm", "dedup", "bench"))
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental dedup: judge an incoming BATCH (doc_id % 10 == 0
     stands in for the day's crawl) against the existing corpus index +
@@ -332,7 +332,7 @@ WHERE {ham} <= 7
 """
 
 
-@register("dedup_simhash64", oracle=_simhash64_oracle(), tags=("llm", "dedup"))
+@register("dedup_simhash64", oracle=_simhash64_oracle(), tags=("llm", "dedup", "bench"))
 def dedup_simhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash(64-bit, two portable 32-bit halves) near-dup pairs within
     hamming ≤ 7 via 8 byte-band pigeonhole blocking — the corpus-scale
@@ -389,7 +389,7 @@ WHERE len(list_intersect(a.grams, b.grams)) * 1.0 /
 """
 
 
-@register("dedup_ngram_jaccard", oracle=_JACCARD_ORACLE, tags=("llm", "dedup"))
+@register("dedup_ngram_jaccard", oracle=_JACCARD_ORACLE, tags=("llm", "dedup", "bench"))
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Char-n-gram Jaccard pairs ≥ 0.5, blocked by (lang, length
     bucket). Gram order is corpus-adaptive (operators/dedup.py:
@@ -458,7 +458,7 @@ SELECT vec_a, vec_b, score FROM scored WHERE score >= 0.35
 """
 
 
-@register("dedup_embedding", oracle=_emb_dedup_oracle(), tags=("llm", "dedup"))
+@register("dedup_embedding", oracle=_emb_dedup_oracle(), tags=("llm", "dedup", "bench"))
 def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup pairs (cosine ≥ τ) via banded hyperplane LSH
     within label blocks — candidates only inside (label, band, bucket)
@@ -577,7 +577,7 @@ SELECT * FROM ranked WHERE rank <= 10
 """
 
 
-@register("ann_ivf", oracle=_ANN_IVF_ORACLE, tags=("llm", "similarity"))
+@register("ann_ivf", oracle=_ANN_IVF_ORACLE, tags=("llm", "similarity", "bench"))
 def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate top-10: 16 inverted lists, 2 probes per query.
     The scale path writes the corpus partitioned by centroid_id so a
@@ -587,7 +587,7 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.ann_topk_ivf(emb, emb.where(F.col("vec_id") < 8), k=10)
 
 
-@register("ann_lsh", oracle=_ann_lsh_oracle(), tags=("llm", "similarity"))
+@register("ann_lsh", oracle=_ann_lsh_oracle(), tags=("llm", "similarity", "bench"))
 def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-5 via 8-hyperplane LSH buckets — the 100 TB path:
     candidates come only from the query's bucket."""
@@ -660,7 +660,7 @@ FROM base
 """
 
 
-@register("text_quality", oracle=_QUALITY_ORACLE, tags=("llm", "text"))
+@register("text_quality", oracle=_QUALITY_ORACLE, tags=("llm", "text", "bench"))
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length/punctuation/stopword quality features + composite score."""
     docs = _docs(spark, sf_dir)
@@ -806,7 +806,7 @@ FROM chars
 
 
 @register(
-    "multimodal_features", oracle=_MM_FEATURES_ORACLE, tags=("llm", "multimodal")
+    "multimodal_features", oracle=_MM_FEATURES_ORACLE, tags=("llm", "multimodal", "bench")
 )
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The multimodal decode path end to end: attach_payload (built-in
@@ -865,7 +865,7 @@ FROM px
 
 
 @register(
-    "multimodal_decode", oracle=_MM_DECODE_ORACLE, tags=("llm", "multimodal")
+    "multimodal_decode", oracle=_MM_DECODE_ORACLE, tags=("llm", "multimodal", "bench")
 )
 def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real image decode through the Arrow path: plant P6 payloads
@@ -930,7 +930,7 @@ FROM px
 
 
 @register(
-    "multimodal_decode_bmp", oracle=_MM_BMP_ORACLE, tags=("llm", "multimodal")
+    "multimodal_decode_bmp", oracle=_MM_BMP_ORACLE, tags=("llm", "multimodal", "bench")
 )
 def multimodal_decode_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real COMPRESSED image decode through the Arrow path: plant RLE8
@@ -1002,7 +1002,7 @@ FROM px
 
 
 @register(
-    "multimodal_decode_gif", oracle=_MM_GIF_ORACLE, tags=("llm", "multimodal")
+    "multimodal_decode_gif", oracle=_MM_GIF_ORACLE, tags=("llm", "multimodal", "bench")
 )
 def multimodal_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real ENTROPY-CODED image decode through the Arrow path: plant
@@ -1180,7 +1180,7 @@ FROM px
 
 
 @register(
-    "multimodal_decode_png", oracle=_MM_PNG_ORACLE, tags=("llm", "multimodal")
+    "multimodal_decode_png", oracle=_MM_PNG_ORACLE, tags=("llm", "multimodal", "bench")
 )
 def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real DEFLATE-era image decode through the Arrow path: plant PNG
@@ -1279,7 +1279,7 @@ FROM px
 @register(
     "multimodal_decode_png_deep",
     oracle=_MM_PNG_DEEP_ORACLE,
-    tags=("llm", "multimodal"),
+    tags=("llm", "multimodal", "bench"),
 )
 def multimodal_decode_png_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Indexed-color and 16-bit PNG decode end to end: plant PLTE
@@ -1345,7 +1345,7 @@ FROM px
 @register(
     "multimodal_decode_jpeg",
     oracle=_MM_JPEG_ORACLE,
-    tags=("llm", "multimodal"),
+    tags=("llm", "multimodal", "bench"),
 )
 def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real TRANSFORM-CODED image decode through the Arrow path: plant
@@ -1407,7 +1407,7 @@ FROM s
 
 
 @register(
-    "multimodal_decode_wav", oracle=_MM_WAV_ORACLE, tags=("llm", "multimodal")
+    "multimodal_decode_wav", oracle=_MM_WAV_ORACLE, tags=("llm", "multimodal", "bench")
 )
 def multimodal_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real AUDIO decode through the Arrow path: plant RIFF/WAVE PCM
@@ -1482,7 +1482,7 @@ FROM st WHERE j = n_codes
 @register(
     "multimodal_decode_wav_ima",
     oracle=_MM_WAV_IMA_ORACLE,
-    tags=("llm", "multimodal"),
+    tags=("llm", "multimodal", "bench"),
 )
 def multimodal_decode_wav_ima(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compressed-audio decode end to end: plant IMA-ADPCM WAV
@@ -1554,7 +1554,7 @@ FROM dims
 @register(
     "multimodal_frame_sample",
     oracle=_MM_FRAMES_ORACLE,
-    tags=("llm", "multimodal"),
+    tags=("llm", "multimodal", "bench"),
 )
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real FRAME SAMPLING through the Arrow path: plant animated GIFs
@@ -1627,7 +1627,7 @@ FROM px
 
 
 @register(
-    "multimodal_resize", oracle=_MM_RESIZE_ORACLE, tags=("llm", "multimodal")
+    "multimodal_resize", oracle=_MM_RESIZE_ORACLE, tags=("llm", "multimodal", "bench")
 )
 def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real image RESIZE through the Arrow path: plant LZW GIFs,
@@ -1732,7 +1732,7 @@ FROM labeled GROUP BY 1, 2
 """
 
 
-@register("corpus_split_counts", oracle=_SPLIT_ORACLE, tags=("llm", "sampling"))
+@register("corpus_split_counts", oracle=_SPLIT_ORACLE, tags=("llm", "sampling", "bench"))
 def corpus_split_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stable 80/10/10 train/val/test assignment keyed on the content
     hash — a doc's split never changes as the corpus grows, the
@@ -1960,7 +1960,7 @@ FROM documents d LEFT JOIN labels l USING (doc_id)
 """
 
 
-@register("dedup_clusters", oracle=_clusters_oracle(), tags=("llm", "dedup", "graph"))
+@register("dedup_clusters", oracle=_clusters_oracle(), tags=("llm", "dedup", "graph", "bench"))
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERS, not just pairs: transitive closure of the
     confident minhash pairs (est_jaccard >= 0.75) via iterative
@@ -2015,7 +2015,7 @@ WHERE d.doc_id % 97 <> 0
 """
 
 
-@register("decontaminate", oracle=_DECONTAM_ORACLE, tags=("llm", "text"))
+@register("decontaminate", oracle=_DECONTAM_ORACLE, tags=("llm", "text", "bench"))
 def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: count distinct word-3-shingles each
     training doc shares with the benchmark set and flag docs at >= 2
@@ -2078,7 +2078,7 @@ FROM base
 """
 
 
-@register("quality_filter", oracle=_QFILTER_ORACLE, tags=("llm", "text"))
+@register("quality_filter", oracle=_QFILTER_ORACLE, tags=("llm", "text", "bench"))
 def quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style quality gate (Rae et al. 2021 §A1.1 re-expressed
     over this corpus): token-count bounds, distinct-token repetition
@@ -2136,7 +2136,7 @@ QUALIFY rank <= 5
 """
 
 
-@register("tfidf_top_terms", oracle=_TFIDF_ORACLE, tags=("llm", "text"))
+@register("tfidf_top_terms", oracle=_TFIDF_ORACLE, tags=("llm", "text", "bench"))
 def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 characteristic terms per source by tf-idf. One explode of
     the token stream feeds BOTH aggregates: per-(source,term) tf and
@@ -2332,7 +2332,7 @@ GROUP BY 1
 """
 
 
-@register("unigram_logprob", oracle=_LOGPROB_ORACLE, tags=("llm", "text"))
+@register("unigram_logprob", oracle=_LOGPROB_ORACLE, tags=("llm", "text", "bench"))
 def unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mean unigram log-probability per doc under the corpus's own
     token distribution — the distributed stand-in for KenLM-style
@@ -2381,7 +2381,7 @@ FROM tok, unnest(range(0, (len(t) - 1) // {_CHUNK_S} + 1)) AS u(seq)
 """
 
 
-@register("corpus_chunk", oracle=_CHUNK_ORACLE, tags=("llm", "text"))
+@register("corpus_chunk", oracle=_CHUNK_ORACLE, tags=("llm", "text", "bench"))
 def corpus_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping token-window chunks (32-token windows, stride 24) —
     the context-window prep step between cleaning and embedding. Pure
@@ -2441,7 +2441,7 @@ FROM tok CROSS JOIN bl
 """
 
 
-@register("boilerplate_prune", oracle=_BOILER_ORACLE, tags=("llm", "text"))
+@register("boilerplate_prune", oracle=_BOILER_ORACLE, tags=("llm", "text", "bench"))
 def boilerplate_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4-style boilerplate removal at token grain: tokens whose document
     frequency exceeds 78% of the corpus are dropped from every document,
@@ -2506,7 +2506,7 @@ FROM tok CROSS JOIN vocab
 """
 
 
-@register("vocab_oov_rate", oracle=_OOV_ORACLE, tags=("llm", "text"))
+@register("vocab_oov_rate", oracle=_OOV_ORACLE, tags=("llm", "text", "bench"))
 def vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Out-of-vocabulary rate per document against the corpus top-K
     vocabulary — the tokenizer-coverage check run before committing to a
@@ -2622,7 +2622,7 @@ def _nearest_cid(qv, cents):
     )["cid"]
 
 
-@register("kmeans_lloyd", oracle=_KM_ORACLE, tags=("llm", "ml"))
+@register("kmeans_lloyd", oracle=_KM_ORACLE, tags=("llm", "ml", "bench"))
 def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two full Lloyd iterations of K=8 k-means over the embeddings —
     the offline clustering ann_ivf's inverted lists and partition
@@ -2726,7 +2726,7 @@ SELECT * FROM ranked WHERE rank <= 5
 """
 
 
-@register("ann_filtered", oracle=_ANN_FILTERED_ORACLE, tags=("llm", "similarity"))
+@register("ann_filtered", oracle=_ANN_FILTERED_ORACLE, tags=("llm", "similarity", "bench"))
 def ann_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid search: exact cosine top-5, but only over corpus vectors
     whose DOCUMENT passes a metadata + content predicate (source
@@ -2768,7 +2768,7 @@ GROUP BY 1
 """
 
 
-@register("inverted_index", oracle=_INVIDX_ORACLE, tags=("llm", "text"))
+@register("inverted_index", oracle=_INVIDX_ORACLE, tags=("llm", "text", "bench"))
 def inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build the inverted index: per token, document frequency, total
     term frequency, and the head of the sorted posting list — the
@@ -2852,7 +2852,7 @@ LEFT JOIN m3 ON b.doc_id = m3.doc_id
 """
 
 
-@register("repetition_metrics", oracle=_REPETITION_ORACLE, tags=("llm", "text"))
+@register("repetition_metrics", oracle=_REPETITION_ORACLE, tags=("llm", "text", "bench"))
 def repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition filter signals (Rae et al. 2021 §A1.1)
     over word n-grams: the token share of the most frequent 2-gram and
@@ -2998,7 +2998,7 @@ FROM a LEFT JOIN drops ON a.vec_id = drops.vb
 """
 
 
-@register("semdedup", oracle=_SEMDEDUP_ORACLE, tags=("llm", "dedup"))
+@register("semdedup", oracle=_SEMDEDUP_ORACLE, tags=("llm", "dedup", "bench"))
 def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup: assign every embedding to its nearest centroid
     (broadcast K seed rows, exact micro-unit BIGINT distances — the
@@ -3124,7 +3124,7 @@ FROM toks b LEFT JOIN per ON b.doc_id = per.doc_id
 """
 
 
-@register("dedup_substring", oracle=_SUBSTR_ORACLE, tags=("llm", "dedup"))
+@register("dedup_substring", oracle=_SUBSTR_ORACLE, tags=("llm", "dedup", "bench"))
 def dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicated-span share per document: the distributed form of
     exact-substring dedup (hash every overlapping 5-token span, count
@@ -3227,7 +3227,7 @@ FROM redacted
 """
 
 
-@register("pii_redact", oracle=_pii_oracle(), tags=("llm", "text"))
+@register("pii_redact", oracle=_pii_oracle(), tags=("llm", "text", "bench"))
 def pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII scrub for the whole corpus in one pass — the registry face
     of functions/text.py::redact_pii/pii_counts: regexp_count per PII
@@ -3304,7 +3304,7 @@ FROM ranked WHERE rk <= {_SRC_CAP}
 """
 
 
-@register("source_caps", oracle=_SOURCE_CAPS_ORACLE, tags=("llm", "corpus"))
+@register("source_caps", oracle=_SOURCE_CAPS_ORACLE, tags=("llm", "corpus", "bench"))
 def source_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep at most K docs per source, ranked by length (quality proxy)
     with a deterministic doc_id tie-break — the domain-balancing step
@@ -3351,7 +3351,7 @@ def source_caps_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     #sources frame). The hot-domain reducer then sorts ~K/sample_rate
     expected rows instead of the domain's whole row count.
 
-    Measured crossover (SCALING_SKEW_R7.json
+    Measured crossover (artifacts/SCALING_SKEW_R7.json
     source_caps_sampled_probe): at 500k docs with a 30%-hot domain
     the pre-drop LOSES (0.81s -> 1.16s skewed; 0.32s -> 0.70s
     uniform) — a 150k-row single-task sort of three narrow columns is
@@ -3420,7 +3420,7 @@ FROM ranked
 """
 
 
-@register("perplexity_buckets", oracle=_PPL_BUCKETS_ORACLE, tags=("llm", "text"))
+@register("perplexity_buckets", oracle=_PPL_BUCKETS_ORACLE, tags=("llm", "text", "bench"))
 def perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language head/middle/tail fluency terciles (CCNet's bucket
     step, corpus-unigram LM standing in for KenLM). Bucket membership
@@ -3495,7 +3495,7 @@ WHERE ov.overlap * 100 >= 80 * n.n_sh
 """
 
 
-@register("dedup_containment", oracle=_CONTAIN_ORACLE, tags=("llm", "dedup"))
+@register("dedup_containment", oracle=_CONTAIN_ORACLE, tags=("llm", "dedup", "bench"))
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Containment ≥ 0.8 pairs (directional: doc_a's shingle set is
     ≥80% inside doc_b's) via operators/dedup.py::containment_pairs —
@@ -3674,7 +3674,7 @@ FROM labeled GROUP BY 1, 2
 @register(
     "curation_pipeline_e2e",
     oracle=_curation_e2e_oracle(),
-    tags=("llm", "dedup", "text", "sampling"),
+    tags=("llm", "dedup", "text", "sampling", "bench"),
 )
 def curation_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The end-to-end curation capstone: quality_filter -> exact dedup
@@ -3838,7 +3838,7 @@ FROM cum GROUP BY shard_id
 @register(
     "export_pipeline_e2e",
     oracle=_export_e2e_oracle(),
-    tags=("llm", "curation", "ops"),
+    tags=("llm", "curation", "ops", "bench"),
 )
 def export_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Curate -> shard -> PUBLISH -> replay -> audit the committed

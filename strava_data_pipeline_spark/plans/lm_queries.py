@@ -86,7 +86,7 @@ WHERE p.c_big >= 2
 """
 
 
-@register("bigram_kneser_ney", oracle=_KN_ORACLE, tags=("llm", "text"))
+@register("bigram_kneser_ney", oracle=_KN_ORACLE, tags=("llm", "text", "bench"))
 def bigram_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interpolated Kneser-Ney bigram model over the corpus's own
     counts — the production-grade smoothing (Chen & Goodman 1999) whose
@@ -184,7 +184,7 @@ WHERE la.split <> lb.split
 """
 
 
-@register("split_leakage", oracle=_LEAKAGE_ORACLE, tags=("llm", "dedup"))
+@register("split_leakage", oracle=_LEAKAGE_ORACLE, tags=("llm", "dedup", "bench"))
 def split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate pairs whose members landed in DIFFERENT splits —
     the train/test leakage a benchmark-decontamination pass cannot see
@@ -312,7 +312,7 @@ def _spark_apply(sym: F.Column, pa: F.Column, pb: F.Column) -> F.Column:
     return F.when(F.size(sym) <= 1, sym).otherwise(merged)
 
 
-@register("bpe_merge_rounds", oracle=_BPE_ORACLE, tags=("llm", "text"))
+@register("bpe_merge_rounds", oracle=_BPE_ORACLE, tags=("llm", "text", "bench"))
 def bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First three merge rules of a BPE tokenizer trained on the
     corpus (Sennrich et al. 2016): per round, the corpus-wide most
@@ -333,7 +333,7 @@ def bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vocab-sized; at 1e6 web-corpus types it is a few MB per executor)
     so the three rounds' fold chains re-derive symbols from the cached
     types, not from three corpus re-scans. Measured at mult=100
-    (SCALING_M100_R7_bpe.json): 105.1s -> 4.3s (25x), exponent
+    (artifacts/SCALING_M100_R7_bpe.json): 105.1s -> 4.3s (25x), exponent
     0.763 -> 0.134.
     No driver collect anywhere: the learned pair rides a 1-row
     broadcast, so 3 rounds or 30k run the same plan shape on a

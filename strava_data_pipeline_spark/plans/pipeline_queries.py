@@ -42,7 +42,7 @@ SELECT event_id, ts, user_id, event_type, value FROM ranked WHERE _rn = 1
 """
 
 
-@register("ingest_upsert", oracle=_UPSERT_ORACLE, tags=("pipeline",))
+@register("ingest_upsert", oracle=_UPSERT_ORACLE, tags=("pipeline", "bench"))
 def ingest_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Re-ingest a simulated refreshed batch (every 10th activity, newer
     ts, changed value) and merge latest-wins — the set-based equivalent of
@@ -246,7 +246,7 @@ FROM sessions
 """
 
 
-@register("jwt_validate", oracle=_JWT_ORACLE, tags=("pipeline",))
+@register("jwt_validate", oracle=_JWT_ORACLE, tags=("pipeline", "bench"))
 def jwt_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JWT claims validation for the whole session population in one
     vectorized pass (reference auth.go:110 GenerateJWT / :130
@@ -339,7 +339,7 @@ GROUP BY 1, 2
 """
 
 
-@register("user_activity_join", oracle=_USER_ACT_ORACLE, tags=("pipeline",))
+@register("user_activity_join", oracle=_USER_ACT_ORACLE, tags=("pipeline", "bench"))
 def user_activity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Users ⋈ activities with per-user rollup. The user dim broadcasts
     under the auto-threshold locally (so the fact never shuffles for
@@ -377,7 +377,7 @@ FROM events GROUP BY 1, 2
 # engines compute bit-identically.
 
 
-@register("athlete_weekly_summary", oracle=_WEEKLY_ORACLE, tags=("pipeline",))
+@register("athlete_weekly_summary", oracle=_WEEKLY_ORACLE, tags=("pipeline", "bench"))
 def athlete_weekly_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly training rollup per athlete (count/total/avg)."""
     return (
@@ -469,7 +469,7 @@ FROM sess GROUP BY 1, 2
 """
 
 
-@register("events_sessionize", oracle=_SESSION_ORACLE, tags=("analytics",))
+@register("events_sessionize", oracle=_SESSION_ORACLE, tags=("analytics", "bench"))
 def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """30-minute-gap sessions per user, rolled up."""
     events = load_table(spark, sf_dir, "events")
@@ -491,7 +491,7 @@ def events_sessionize_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Registered like user_activity_join_salted: the skew fallback is
     held to the exact hash contract of the plain path, not just unit
     tests. Motivated by the r7 Zipf rehearsal's measured 3.8x
-    hot-user window tax (SCALING_SKEW_R7.json)."""
+    hot-user window tax (artifacts/SCALING_SKEW_R7.json)."""
     from strava_data_pipeline_spark.operators.sessionize import (
         sessionize_bucketed,
     )
@@ -559,7 +559,7 @@ FROM ranked WHERE _rn = 1 AND op != 'D'
 """
 
 
-@register("cdc_merge", oracle=_CDC_ORACLE, tags=("pipeline",))
+@register("cdc_merge", oracle=_CDC_ORACLE, tags=("pipeline", "bench"))
 def cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batched change-data-capture merge: the reference's
     UpdateActivity + DeleteActivity as one set-based pass. A synthetic
@@ -630,7 +630,7 @@ SELECT id, username, athlete_id, updated_at FROM ranked WHERE _rn = 1
 """
 
 
-@register("user_upsert", oracle=_USER_UPSERT_ORACLE, tags=("pipeline",))
+@register("user_upsert", oracle=_USER_UPSERT_ORACLE, tags=("pipeline", "bench"))
 def user_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Users-dim maintenance: the reference's CreateUser (user.go:34)
     and UpdateUser (user.go:110) as ONE set-based latest-wins merge —
@@ -702,7 +702,7 @@ FROM users u JOIN tokens t ON t.user_id = u.id
 """
 
 
-@register("user_token_state", oracle=_TOKEN_STATE_ORACLE, tags=("pipeline",))
+@register("user_token_state", oracle=_TOKEN_STATE_ORACLE, tags=("pipeline", "bench"))
 def user_token_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """User ⋈ OAuth-token state with a vectorized needs-refresh flag
     (reference strava.go:156 saveAthlete, :196 GetUserByID; the
@@ -777,7 +777,7 @@ FROM ranked WHERE _rn = 1
 """
 
 
-@register("token_refresh", oracle=_TOKEN_REFRESH_ORACLE, tags=("pipeline",))
+@register("token_refresh", oracle=_TOKEN_REFRESH_ORACLE, tags=("pipeline", "bench"))
 def token_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OAuth token refresh for the whole expired population in one merge
     (reference strava.go:103 RefreshToken, per-client imperative; here
@@ -859,7 +859,7 @@ FROM ranked WHERE _rn = 1 AND op != 'D'
 """
 
 
-@register("key_lifecycle", oracle=_KEY_LIFECYCLE_ORACLE, tags=("pipeline",))
+@register("key_lifecycle", oracle=_KEY_LIFECYCLE_ORACLE, tags=("pipeline", "bench"))
 def key_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """API-key dim mutation as one CDC merge: a create batch (new key
     per user id ending 3), a deactivation batch (id ending 4 — the key
@@ -1084,7 +1084,7 @@ FROM per_session GROUP BY 1
 """
 
 
-@register("session_stats", oracle=_SESSION_STATS_ORACLE, tags=("pipeline",))
+@register("session_stats", oracle=_SESSION_STATS_ORACLE, tags=("pipeline", "bench"))
 def session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user engagement profile over 30-min-gap sessions: the
     two-level rollup (events → sessions → user) reuses the sessionize
@@ -1128,7 +1128,7 @@ GROUP BY 1
 """
 
 
-@register("bucketed_join", oracle=_BUCKETED_ORACLE, tags=("layout",))
+@register("bucketed_join", oracle=_BUCKETED_ORACLE, tags=("layout", "bench"))
 def bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-nation activity stats through a join of two BUCKETED managed
     tables (events by user_id, users by c_custkey, 8 buckets each).
@@ -1180,7 +1180,7 @@ FROM events
 """
 
 
-@register("zorder_curve", oracle=_zorder_oracle(), tags=("layout",))
+@register("zorder_curve", oracle=_zorder_oracle(), tags=("layout", "bench"))
 def zorder_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Z-order (Morton) clustering key over (user_id, value):
     pure shift/and bit interleaving, zero shuffles, one codegen span —
@@ -1324,7 +1324,7 @@ WHERE o.event_id IS NULL OR n.event_id IS NULL
 """
 
 
-@register("snapshot_diff", oracle=_SNAPDIFF_ORACLE, tags=("pipeline", "versioned"))
+@register("snapshot_diff", oracle=_SNAPDIFF_ORACLE, tags=("pipeline", "versioned", "bench"))
 def snapshot_diff_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-level change feed between two committed snapshot versions —
     the batch CDF read Delta/Iceberg expose, over this repo's own

@@ -84,7 +84,7 @@ FROM (
 
 
 @register(
-    "join_cardinality_audit", oracle=_jca_oracle(), tags=("ops", "layout")
+    "join_cardinality_audit", oracle=_jca_oracle(), tags=("ops", "layout", "bench")
 )
 def join_cardinality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-cardinality estimation audit: for three join shapes, the
@@ -180,7 +180,7 @@ LEFT JOIN actual a ON a.probe = p.probe
 """
 
 
-@register("selectivity_audit", oracle=_SEL_ORACLE, tags=("ops", "layout"))
+@register("selectivity_audit", oracle=_SEL_ORACLE, tags=("ops", "layout", "bench"))
 def selectivity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equality-selectivity audit: the uniformity estimate N/ndv for
     `o_custkey = ?` against the true per-value count, over a
@@ -254,7 +254,7 @@ SELECT day, n_rows, day_bytes, bin FROM planned
 """
 
 
-@register("compaction_plan", oracle=_COMPACT_ORACLE, tags=("ops", "layout"))
+@register("compaction_plan", oracle=_COMPACT_ORACLE, tags=("ops", "layout", "bench"))
 def compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-file compaction plan for the day-partitioned event store:
     per day, its payload size and the merged output file (bin) it
@@ -343,7 +343,7 @@ UNION ALL SELECT 'lineitem_orderkey_fk', orphans FROM fk
 """
 
 
-@register("data_quality_checks", oracle=_DQ_ORACLE, tags=("ops", "pipeline"))
+@register("data_quality_checks", oracle=_DQ_ORACLE, tags=("ops", "pipeline", "bench"))
 def data_quality_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-pass data-quality expectation audit (the dbt-test /
     Great-Expectations layer as a query): primary-key uniqueness,
@@ -743,7 +743,7 @@ FROM p LEFT JOIN v
 """
 
 
-@register("attribution_audit", oracle=_ATTR_AUDIT_ORACLE, tags=("streaming", "ops"))
+@register("attribution_audit", oracle=_ATTR_AUDIT_ORACLE, tags=("streaming", "ops", "bench"))
 def attribution_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end audit of the stream-stream attribution join: split
     the event table into a lead feed (views: event_id % 3 != 0) and a
@@ -790,7 +790,7 @@ def attribution_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     can decide, so a bucketed outer join would need a second stateful
     repair stage; the production hot-key shape is the bucketed inner
     join for attribution plus a batch anti-join for the unmatched
-    tail (SCALING_SKEW_R10.json records both measurements)."""
+    tail (artifacts/SCALING_SKEW_R10.json records both measurements)."""
     from strava_data_pipeline_spark.streaming.joins import (
         attribute_with_unmatched,
     )
@@ -909,7 +909,7 @@ FROM p JOIN v
 @register(
     "attribution_inner_audit",
     oracle=_ATTR_INNER_ORACLE,
-    tags=("streaming", "ops"),
+    tags=("streaming", "ops", "bench"),
 )
 def attribution_inner_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Committed-artifact audit of the BUCKETED inner attribution join
@@ -921,7 +921,7 @@ def attribution_inner_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot user's state across buckets, so per-row state iteration is
     bounded by two buckets of that user instead of its whole history —
     the measured remedy for the quadratic hot-key grind
-    (SCALING_SKEW_R10.json)."""
+    (artifacts/SCALING_SKEW_R10.json)."""
     from strava_data_pipeline_spark.streaming.joins import (
         attribute_to_prior_event_bucketed,
     )
@@ -936,7 +936,7 @@ def attribution_inner_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Closes the one streaming scale hazard the r10 verdict left answered
 # only in prose: the LEFT-OUTER attribution result on a hot-key corpus
-# where the plain-key outer join is unrunnable (SCALING_SKEW_R10:
+# where the plain-key outer join is unrunnable (artifacts/SCALING_SKEW_R10:
 # killed at >1500s on the 25%-hot-user mult=100 feed). An unmatched
 # follow is a per-key GLOBAL fact no single bucket copy can decide, so
 # the outer join itself cannot bucket — but the COMPOSITION can: run
@@ -950,7 +950,7 @@ def attribution_inner_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "attribution_unmatched_audit",
     oracle=_ATTR_AUDIT_ORACLE,
-    tags=("streaming", "ops"),
+    tags=("streaming", "ops", "bench"),
 )
 def attribution_unmatched_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Production LEFT-OUTER attribution for hot-key corpora: the

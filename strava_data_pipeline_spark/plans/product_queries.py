@@ -60,7 +60,7 @@ WHERE event_type = 'purchase'
 
 
 @register(
-    "attribution_last_touch", oracle=_ATTR_ORACLE, tags=("temporal", "ops")
+    "attribution_last_touch", oracle=_ATTR_ORACLE, tags=("temporal", "ops", "bench")
 )
 def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Last-touch attribution: for every purchase, the user's most
@@ -124,7 +124,7 @@ def attribution_last_touch_bucketed(
     """attribution_last_touch through the two-phase carry — SAME
     oracle, identical hash. The plain query's last-non-purchase
     ignorenulls window hands ONE task the hot user's whole stream
-    (measured 4.37x tax, SCALING_SKEW_R8.json);
+    (measured 4.37x tax, artifacts/SCALING_SKEW_R8.json);
     operators/bucketed_prefix.bucketed_carry computes the identical
     strictly-before last-non-null over (user, day) buckets — the
     conditional columns pass straight through as the carry inputs
@@ -194,7 +194,7 @@ FROM assigned GROUP BY 1
 """
 
 
-@register("ab_test_eval", oracle=_AB_ORACLE, tags=("ops", "pipeline"))
+@register("ab_test_eval", oracle=_AB_ORACLE, tags=("ops", "pipeline", "bench"))
 def ab_test_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A/B experiment readout over purchase values: per arm, exact
     counts, cents sums and sums-of-squares (the sufficient statistics
@@ -255,7 +255,7 @@ FROM dau d JOIN mau m ON d.day // 30 = m.bucket
 """
 
 
-@register("dau_mau_stickiness", oracle=_DAU_ORACLE, tags=("temporal", "ops"))
+@register("dau_mau_stickiness", oracle=_DAU_ORACLE, tags=("temporal", "ops", "bench"))
 def dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DAU/MAU stickiness per day: daily active users over the 30-day-
     bucket active users — the engagement headline number. Day and

@@ -114,7 +114,7 @@ LEFT JOIN tot USING (doc_id)
 """
 
 
-@register("dedup_span_rewrite", oracle=_SPAN_REWRITE_ORACLE, tags=("llm", "dedup"))
+@register("dedup_span_rewrite", oracle=_SPAN_REWRITE_ORACLE, tags=("llm", "dedup", "bench"))
 def dedup_span_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring dedup, REMOVE semantics (Lee et al. 2022): every
     8-token block that occurs anywhere else in the corpus keeps exactly
@@ -234,7 +234,7 @@ WHERE d.doc_id % 97 <> 0
 
 
 @register(
-    "decontaminate_span", oracle=_DECONTAM_SPAN_ORACLE, tags=("llm", "text")
+    "decontaminate_span", oracle=_DECONTAM_SPAN_ORACLE, tags=("llm", "text", "bench")
 )
 def decontaminate_span(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Span-level decontamination: blocks sharing ANY word-3-shingle
@@ -346,7 +346,7 @@ FROM per
 """
 
 
-@register("entropy_score", oracle=_ENTROPY_ORACLE, tags=("llm", "text"))
+@register("entropy_score", oracle=_ENTROPY_ORACLE, tags=("llm", "text", "bench"))
 def entropy_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document token Shannon entropy — the Gopher-class signal
     that catches templated/repetitive documents the length and
@@ -433,7 +433,7 @@ FROM n GROUP BY source
 
 
 @register(
-    "text_normalize", oracle=_NORMALIZE_ORACLE, tags=("llm", "text", "rewrite")
+    "text_normalize", oracle=_NORMALIZE_ORACLE, tags=("llm", "text", "rewrite", "bench")
 )
 def text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace-collapse + trim + lowercase canonicalization with a

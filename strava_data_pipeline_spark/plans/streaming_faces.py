@@ -56,7 +56,7 @@ _FLUSH_TYPE = "__flush"
 
 # Bound on one face stream's wait, well above the slowest face run on
 # record (attribution_audit, 432 s at mult=100 in
-# SCALING_M100_R8_tunedC2.json): a trigger that never finishes fails
+# artifacts/SCALING_M100_R8_tunedC2.json): a trigger that never finishes fails
 # the query loudly instead of hanging the run.
 _STREAM_WAIT_S = 1800
 
@@ -651,7 +651,7 @@ FROM marked
 
 
 @register(
-    "versioned_sink_audit", oracle=_VSINK_ORACLE, tags=("streaming", "ops")
+    "versioned_sink_audit", oracle=_VSINK_ORACLE, tags=("streaming", "ops", "bench")
 )
 @stream_tuned
 def versioned_sink_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -809,7 +809,7 @@ SELECT doc_id FROM ({' UNION ALL '.join(f'SELECT doc_id FROM k{i}' for i in rang
 @register(
     "dedup_index_audit",
     oracle=_dedup_index_oracle(),
-    tags=("streaming", "llm", "dedup"),
+    tags=("streaming", "llm", "dedup", "bench"),
 )
 # deliberately NOT @stream_tuned: the per-batch band joins against the
 # whole kept index are REAL batch work — analytics width wins (grid-

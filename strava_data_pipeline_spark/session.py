@@ -73,3 +73,26 @@ def get_spark(
     if default_par:
         builder = builder.config("spark.default.parallelism", default_par)
     return builder.getOrCreate()
+
+
+def warm_python_workers(spark: SparkSession) -> None:
+    """Fork and warm one Python worker per core before anything is timed.
+
+    The first mapInPandas/Arrow query in a JVM otherwise pays a worker
+    fork per core plus a pandas+numpy import in each (~10s at 32 cores:
+    multimodal_decode measured 10.97s cold vs 1.38s warm), a startup
+    cost charged to whichever query first crosses the Python boundary.
+    One identity mapInPandas over one partition per core warms them all.
+    """
+
+    def _warm(it):
+        import numpy  # noqa: F401  — the decode stages' import cost
+
+        return it
+
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or (
+        os.cpu_count() or 8
+    )
+    spark.range(0, cpus, 1, cpus).mapInPandas(_warm, "id long").write.format(
+        "noop"
+    ).mode("overwrite").save()

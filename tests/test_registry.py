@@ -28,15 +28,21 @@ def test_inventory_complete(queries):
     assert expected <= set(queries)
 
 
-def test_priority_names_enumerate_first(queries):
-    # driver sampling is enumeration-order-sensitive; the never-checked
-    # set must lead both queries() and oracle coverage
-    names = list(queries)
-    head = registry._ENUMERATE_FIRST
-    assert set(head) <= set(names), "every priority name must be registered"
-    assert tuple(names[: len(head)]) == head
-    oracle_names = list(registry.all_oracles())
-    assert oracle_names[: len(head)] == list(head)
+def test_bench_tag_is_the_baseline_set():
+    # the registry's "bench" tag is the only list of headline queries:
+    # bench.py iterates it, and it must name exactly the queries the
+    # recorded floors cover
+    import json
+    import os
+
+    bench_names = registry.tagged("bench")
+    assert len(bench_names) == len(set(bench_names))
+    assert set(bench_names) <= set(registry.REGISTRY)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "BASELINE_BENCH.json")) as f:
+        floors = json.load(f)["queries"]
+    assert set(bench_names) == set(floors)
+    assert len(bench_names) == 158
 
 
 def test_every_query_has_oracle(queries):
@@ -281,34 +287,44 @@ def test_bench_bands_merge_guards_inflated_highs():
     # regressed time into the high-water mark forever. A candidate
     # high that would itself excuse a gate-able regression (past
     # ratio*floor AND the 1s cutoff) must NOT merge by default, and
-    # every merge must leave an auditable provenance record.
+    # every merge must leave an auditable provenance record. The
+    # headline and tier2 keys merge by the same rule.
     import sys
 
     sys.path.insert(0, "tools")
     from bench_bands import merge_bands
 
-    base = {
-        "queries": {"hot": 2.0, "cold": 0.2},
-        "bands": {"hot": [2.0, 2.4], "cold": [0.2, 0.3]},
-    }
-    # hot measured at 4.0 (2x floor, >1s): inflated -> capped
-    # cold measured at 0.5 (2.5x floor but sub-cutoff): legit widen
-    merged = merge_bands(
-        dict(base), [{"hot": 4.0, "cold": 0.5}], source="test"
-    )
-    assert merged["bands"]["hot"] == [2.0, 2.4]
-    assert merged["bands"]["cold"] == [0.2, 0.5]
-    prov = merged["band_provenance"][-1]
-    assert prov["source"] == "test"
-    assert "hot" in prov["capped_inflated_highs"]
-    # floors still move down on a better measurement
-    merged2 = merge_bands(dict(base), [{"hot": 1.5, "cold": 0.2}], "test")
-    assert merged2["queries"]["hot"] == 1.5
-    # --allow-inflated merges the high (the sanctioned reset path)
-    merged3 = merge_bands(
-        dict(base), [{"hot": 4.0, "cold": 0.5}], "test", allow_inflated=True
-    )
-    assert merged3["bands"]["hot"] == [2.0, 4.0]
+    for p in ("", "tier2_"):
+        base = {
+            p + "queries": {"hot": 2.0, "cold": 0.2},
+            p + "bands": {"hot": [2.0, 2.4], "cold": [0.2, 0.3]},
+        }
+        # hot measured at 4.0 (2x floor, >1s): inflated -> capped
+        # cold measured at 0.5 (2.5x floor but sub-cutoff): legit widen
+        merged = merge_bands(
+            dict(base), [{"hot": 4.0, "cold": 0.5}], source="test", prefix=p
+        )
+        assert merged[p + "bands"]["hot"] == [2.0, 2.4]
+        assert merged[p + "bands"]["cold"] == [0.2, 0.5]
+        prov = merged[p + "band_provenance"][-1]
+        assert prov["source"] == "test"
+        assert "hot" in prov["capped_inflated_highs"]
+        # floors still move down on a better measurement
+        merged2 = merge_bands(
+            dict(base), [{"hot": 1.5, "cold": 0.2}], "test", prefix=p
+        )
+        assert merged2[p + "queries"]["hot"] == 1.5
+        # --allow-inflated merges the high (the sanctioned reset path)
+        merged3 = merge_bands(
+            dict(base),
+            [{"hot": 4.0, "cold": 0.5}],
+            "test",
+            allow_inflated=True,
+            prefix=p,
+        )
+        assert merged3[p + "bands"]["hot"] == [2.0, 4.0]
+        # a tier's merge writes only its own keys
+        assert all(k.startswith("tier2_") == bool(p) for k in merged3)
 
 
 def test_bench_bands_maintains_sub_cutoff_sum_band():
@@ -317,28 +333,34 @@ def test_bench_bands_maintains_sub_cutoff_sum_band():
     sys.path.insert(0, "tools")
     from bench_bands import merge_bands
 
-    base = {"queries": {"a": 0.2, "b": 0.3, "big": 5.0}}
-    runs = [
-        {"a": 0.25, "b": 0.35, "big": 5.2},
-        {"a": 0.3, "b": 0.4, "big": 5.1},
-    ]
-    merged = merge_bands(dict(base), runs, "test")
-    assert merged["sub_cutoff_band"] == [0.6, 0.7]
-    # the membership the band was measured over is frozen next to it
-    # (ADVICE r7: the gate must compare the same query set)
-    assert merged["sub_cutoff_members"] == ["a", "b"]
-    # a high past ratio x floor-sum but within the 1s absolute delta is
-    # the same scheduler jitter the gate excuses — merged, not capped
-    # (ADVICE r7: the old guard refused highs the gate would never flag)
-    merged2 = merge_bands(dict(merged), [{"a": 0.5, "b": 0.6, "big": 5.0}], "t2")
-    assert merged2["sub_cutoff_band"][1] == 1.1
-    assert "sub_cutoff_sum" not in merged2["band_provenance"][-1][
-        "capped_inflated_highs"
-    ]
-    # an inflated sum high past BOTH gate criteria (ratio AND >=1s
-    # absolute growth) is capped
-    merged3 = merge_bands(dict(merged), [{"a": 1.0, "b": 0.8, "big": 5.0}], "t3")
-    assert merged3["sub_cutoff_band"][1] == 0.7
-    assert "sub_cutoff_sum" in merged3["band_provenance"][-1][
-        "capped_inflated_highs"
-    ]
+    for p in ("", "tier2_"):
+        base = {p + "queries": {"a": 0.2, "b": 0.3, "big": 5.0}}
+        runs = [
+            {"a": 0.25, "b": 0.35, "big": 5.2},
+            {"a": 0.3, "b": 0.4, "big": 5.1},
+        ]
+        merged = merge_bands(dict(base), runs, "test", prefix=p)
+        assert merged[p + "sub_cutoff_band"] == [0.6, 0.7]
+        # the membership the band was measured over is frozen next to it
+        # (ADVICE r7: the gate must compare the same query set)
+        assert merged[p + "sub_cutoff_members"] == ["a", "b"]
+        # a high past ratio x floor-sum but within the 1s absolute delta
+        # is the same scheduler jitter the gate excuses — merged, not
+        # capped (ADVICE r7: the old guard refused highs the gate would
+        # never flag)
+        merged2 = merge_bands(
+            dict(merged), [{"a": 0.5, "b": 0.6, "big": 5.0}], "t2", prefix=p
+        )
+        assert merged2[p + "sub_cutoff_band"][1] == 1.1
+        assert "sub_cutoff_sum" not in merged2[p + "band_provenance"][-1][
+            "capped_inflated_highs"
+        ]
+        # an inflated sum high past BOTH gate criteria (ratio AND >=1s
+        # absolute growth) is capped
+        merged3 = merge_bands(
+            dict(merged), [{"a": 1.0, "b": 0.8, "big": 5.0}], "t3", prefix=p
+        )
+        assert merged3[p + "sub_cutoff_band"][1] == 0.7
+        assert "sub_cutoff_sum" in merged3[p + "band_provenance"][-1][
+            "capped_inflated_highs"
+        ]

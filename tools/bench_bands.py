@@ -26,9 +26,15 @@ unguarded, so each merge also maintains "sub_cutoff_band": the [lo, hi]
 of SUM over sub-floor queries per run — bench.py gates that sum as one
 quantity.
 
+Both bench tiers merge the same way: the headline `queries` into the
+unprefixed keys, and `tier2_queries` (all-registry sf0.01, present
+when the bench ran with SPARK_GRAFT_BENCH_ALL=1) into the same keys
+prefixed `tier2_`. Every tier a bench output carries is merged.
+
 Usage:
-    python tools/bench_bands.py [--runs 3] [--baseline BASELINE_BENCH.json]
-        [--from-json BENCH.json ...] [--allow-inflated] [--write]
+    [SPARK_GRAFT_BENCH_ALL=1] python tools/bench_bands.py [--runs 3]
+        [--baseline BASELINE_BENCH.json] [--from-json BENCH.json ...]
+        [--allow-inflated] [--write]
 
 --from-json merges already-recorded bench output files (one run each)
 instead of re-running the bench. Without --write, prints the merged
@@ -44,12 +50,12 @@ import subprocess
 import sys
 import time
 
+from bench_compare import CUTOFF, RATIO
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-RATIO = 1.5
-CUTOFF = 1.0
 
 
-def run_bench_once(env: dict) -> dict[str, float]:
+def run_bench_once(env: dict) -> dict:
     out = subprocess.run(
         [sys.executable, os.path.join(REPO, "bench.py")],
         capture_output=True,
@@ -58,15 +64,16 @@ def run_bench_once(env: dict) -> dict[str, float]:
         timeout=3600,
     )
     line = out.stdout.strip().splitlines()[-1]
-    return json.loads(line)["queries"]
+    return json.loads(line)
 
 
-def load_run(path: str) -> dict[str, float]:
+def load_run(path: str) -> dict:
+    """One recorded bench output, unwrapped from a wrapper's "parsed" key."""
     with open(path) as f:
         d = json.load(f)
     if "parsed" in d and "queries" in d.get("parsed", {}):
-        return d["parsed"]["queries"]
-    return d["queries"]
+        return d["parsed"]
+    return d
 
 
 def merge_bands(
@@ -74,9 +81,12 @@ def merge_bands(
     runs: list[dict[str, float]],
     source: str,
     allow_inflated: bool = False,
+    prefix: str = "",
 ) -> dict:
     """Merge per-query [lo, hi] bands from ``runs`` into ``base``
-    (a BASELINE_BENCH document) in place, and return it.
+    (a BASELINE_BENCH document) in place, and return it. ``prefix``
+    picks the tier: "" for the headline keys, "tier2_" for the tier2
+    ones (``tier2_queries``, ``tier2_bands``, ...).
 
     Floors and band lows move down unconditionally (a better
     measurement). Band highs widen ONLY while they stay un-gateable
@@ -85,8 +95,8 @@ def merge_bands(
     permanently excuse a live regression — such highs are skipped
     (and recorded in provenance) unless ``allow_inflated``."""
     names = sorted(set().union(*[set(r) for r in runs]))
-    floors = base.setdefault("queries", {})
-    old_bands = base.get("bands", {})
+    floors = base.setdefault(prefix + "queries", {})
+    old_bands = base.get(prefix + "bands", {})
     capped: list[str] = []
     new_bands = dict(old_bands)
     for n in names:
@@ -111,9 +121,10 @@ def merge_bands(
             else:
                 band[1] = hi
         new_bands[n] = [round(band[0], 3), round(band[1], 3)]
-    base["bands"] = new_bands
-    base["band_runs"] = base.get("band_runs", 0) + len(runs)
-    base["total_sec"] = round(sum(floors.values()), 3)
+    base[prefix + "bands"] = new_bands
+    base[prefix + "band_runs"] = base.get(prefix + "band_runs", 0) + len(runs)
+    # the headline total's key predates the tier prefixes
+    base[prefix + "total" if prefix else "total_sec"] = round(sum(floors.values()), 3)
 
     # sub-cutoff SUM band (the aggregate the per-query cutoff skips):
     # per run, sum over queries whose FLOOR is sub-cutoff; the sum
@@ -127,12 +138,12 @@ def merge_bands(
     ]
     if sub_sums:
         floor_sum = sum(floors[n] for n in sub_names)
-        old = base.get("sub_cutoff_band") or [min(sub_sums), min(sub_sums)]
+        old = base.get(prefix + "sub_cutoff_band") or [min(sub_sums), min(sub_sums)]
         # membership moved since the band was recorded (a floor crossed
         # the cutoff, or new queries landed) → the recorded spread was
         # measured over a DIFFERENT query set; restart the band from
         # this run set instead of merging incomparable sums (ADVICE r7)
-        if base.get("sub_cutoff_members") != sub_names:
+        if base.get(prefix + "sub_cutoff_members") != sub_names:
             old = [min(sub_sums), min(sub_sums)]
         hi = max(sub_sums)
         # high guard mirrors BOTH gate criteria (ratio AND the
@@ -146,16 +157,16 @@ def merge_bands(
         ):
             capped.append("sub_cutoff_sum")
             hi = old[1]
-        base["sub_cutoff_band"] = [
+        base[prefix + "sub_cutoff_band"] = [
             round(min(old[0], *sub_sums), 3),
             round(max(old[1], hi), 3),
         ]
         # freeze the membership the band was measured over — the gate
         # recomputing membership from CURRENT floors would compare a
         # differently-composed sum against this band
-        base["sub_cutoff_members"] = sub_names
+        base[prefix + "sub_cutoff_members"] = sub_names
 
-    base.setdefault("band_provenance", []).append(
+    base.setdefault(prefix + "band_provenance", []).append(
         {
             "source": source,
             "at": time.strftime("%Y-%m-%d %H:%M:%S"),
@@ -166,7 +177,7 @@ def merge_bands(
     )
     if capped:
         print(
-            "WARNING: inflated band highs NOT merged (past "
+            f"WARNING: inflated {prefix}band highs NOT merged (past "
             f"{RATIO}x floor and the {CUTOFF}s cutoff): {capped} — "
             "fix the regression or re-run with --allow-inflated",
             file=sys.stderr,
@@ -191,23 +202,28 @@ def main() -> int:
     args = ap.parse_args()
 
     if args.from_json:
-        runs = [load_run(p) for p in args.from_json]
+        docs = [load_run(p) for p in args.from_json]
         source = ",".join(os.path.basename(p) for p in args.from_json)
     else:
         env = dict(os.environ)
-        runs = []
+        docs = []
         for i in range(args.runs):
-            q = run_bench_once(env)
-            runs.append(q)
+            d = run_bench_once(env)
+            docs.append(d)
             print(
-                f"run {i + 1}/{args.runs}: total {sum(q.values()):.1f}s",
+                f"run {i + 1}/{args.runs}: total {sum(d['queries'].values()):.1f}s",
                 file=sys.stderr,
             )
         source = "bench.py"
 
     with open(args.baseline) as f:
         base = json.load(f)
-    base = merge_bands(base, runs, source, allow_inflated=args.allow_inflated)
+    for prefix in ("", "tier2_"):
+        runs = [d[prefix + "queries"] for d in docs if prefix + "queries" in d]
+        if runs:
+            merge_bands(
+                base, runs, source, allow_inflated=args.allow_inflated, prefix=prefix
+            )
 
     text = json.dumps(base, indent=1)
     if args.write:

@@ -20,6 +20,14 @@ from __future__ import annotations
 import json
 import sys
 
+# The regression gate's constants, shared by bench.py's gate and
+# bench_bands.py's merge guard: a query regresses past RATIO x its
+# floor; times under CUTOFF seconds are jitter, not plan regressions;
+# a recorded band high excuses times up to BAND_MARGIN x itself.
+RATIO = 1.5
+CUTOFF = 1.0
+BAND_MARGIN = 1.25
+
 
 def _load(path: str) -> dict:
     with open(path) as f:
@@ -38,10 +46,10 @@ def _queries(path: str) -> dict[str, float]:
 def compare(
     base: dict[str, float],
     cur: dict[str, float],
-    ratio: float = 1.5,
+    ratio: float = RATIO,
     min_abs_sec: float = 0.0,
     bands: dict[str, list[float]] | None = None,
-    band_margin: float = 1.25,
+    band_margin: float = BAND_MARGIN,
 ) -> list[str]:
     """Names of queries slower than ``ratio``× their baseline.
     ``min_abs_sec`` ignores sub-threshold absolute times — a 0.1s query
@@ -71,7 +79,7 @@ def main() -> int:
     base_doc = _load(sys.argv[1])
     base = base_doc["queries"]
     cur = _queries(sys.argv[2])
-    ratio = float(sys.argv[3]) if len(sys.argv) > 3 else 1.5
+    ratio = float(sys.argv[3]) if len(sys.argv) > 3 else RATIO
 
     regressed = set(compare(base, cur, ratio, bands=base_doc.get("bands")))
     for name in sorted(cur):

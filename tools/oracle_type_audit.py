@@ -12,6 +12,7 @@ Usage: python tools/oracle_type_audit.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
@@ -21,14 +22,12 @@ BAD = ("HUGEINT", "DECIMAL", "WITH TIME ZONE", "UBIGINT", "UINTEGER")
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as e
+    from strava_data_pipeline_spark.sources.catalog import TABLES
 
     con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split():
+    for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     hits = 0

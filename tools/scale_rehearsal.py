@@ -21,8 +21,9 @@ Usage:
     python tools/scale_rehearsal.py [--mult 10] [--out .scratch/sfX]
         [--base /root/testdata/sf0.1] [--queries a,b,c] [--report FILE]
 
-Writes the report JSON (default SCALING_LOCAL.json at repo root) and
-prints it as one line.
+Writes the report JSON (default artifacts/SCALING_LOCAL.json, git-ignored
+beside the committed SCALING_* records; a relative path resolves against
+the repo root) and prints it as one line.
 """
 
 from __future__ import annotations
@@ -269,7 +270,7 @@ def main() -> int:
         "analytics = window/join-heavy events + TPC-H shapes",
     )
     ap.add_argument("--queries", default=None)
-    ap.add_argument("--report", default="SCALING_LOCAL.json")
+    ap.add_argument("--report", default="artifacts/SCALING_LOCAL.json")
     ap.add_argument("--repeats", type=int, default=2)
     ap.add_argument("--skip-build", action="store_true")
     args = ap.parse_args()

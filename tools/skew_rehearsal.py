@@ -34,7 +34,7 @@ counts from minhash_lsh_pairs with the production cap vs uncapped
 Usage:
     python tools/skew_rehearsal.py [--mult 100]
         [--base /root/testdata/sf0.1] [--uniform-scaled .scratch/sfx100]
-        [--report SCALING_SKEW_R7.json] [--skip-build]
+        [--report artifacts/SCALING_SKEW_LOCAL.json] [--skip-build]
 """
 
 from __future__ import annotations
@@ -410,7 +410,9 @@ def main() -> int:
     ap.add_argument("--mult", type=int, default=100)
     ap.add_argument("--base", default="/root/testdata/sf0.1")
     ap.add_argument("--uniform-scaled", default=None)
-    ap.add_argument("--report", default="SCALING_SKEW_R7.json")
+    # a relative --report resolves against the repo root; the default
+    # is git-ignored so a plain run cannot overwrite a committed record
+    ap.add_argument("--report", default="artifacts/SCALING_SKEW_LOCAL.json")
     ap.add_argument("--repeats", type=int, default=2)
     ap.add_argument("--skip-build", action="store_true")
     ap.add_argument(

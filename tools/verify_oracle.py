@@ -85,9 +85,10 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as e
-    from strava_data_pipeline_spark.session import get_spark
+    from strava_data_pipeline_spark.session import get_spark, warm_python_workers
+    from strava_data_pipeline_spark.sources.catalog import TABLES
 
     # the comparator collects full results for hashing — session.py
     # sizes spark.driver.maxResultSize (default 8g) so rehearsal-scale
@@ -95,29 +96,11 @@ def main() -> int:
     # of tripping the 1g default
     spark = get_spark("verify-oracle")
     spark.sparkContext.setLogLevel("ERROR")
-
-    # Warm the Python worker runtime exactly like bench.py does: the
-    # first mapInPandas/Arrow query in a JVM pays one worker fork per
-    # core plus a pandas+numpy import in each (~10s at 32 cores,
-    # measured in r11) — a session startup cost, not any query's own
-    # work. One identity mapInPandas over one partition per core forks
-    # and warms them all before the first timed/compared query runs.
-    def _warm(it):
-        import numpy  # noqa: F401
-
-        return it
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or (
-        os.cpu_count() or 8
-    )
-    spark.range(0, cpus, 1, cpus).mapInPandas(_warm, "id long").write.format(
-        "noop"
-    ).mode("overwrite").save()
+    # the first Arrow query must not pay the worker forks (bench.py too)
+    warm_python_workers(spark)
 
     con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
+    for t in TABLES:
         # driver testdata is one file per table; rehearsal corpora
         # (.scratch/sfx*) are Spark-written DIRECTORIES — glob those
         path = f"{sf_dir}/{t}.parquet"
